@@ -187,15 +187,17 @@ def eval_aggregation(ctx: EvalContext, node: AggregateExpr, vf: VectorFrame, par
     v = F.col("value")
     hist_part = None
     mixed = False
-    if op in ("sum", "avg") and "hist" in fact.columns:
+    from prometheus_spark.engine.range_functions import hist_possible
+
+    if op in ("sum", "avg") and hist_possible(ctx, fact):
         # sum/avg aggregate histograms too (engine.go:3716 KahanAdd);
         # groups mixing float and histogram samples are dropped with a
         # warning (engine.go:3854-3860).  The kind flags ride the float
         # aggregation's OWN shuffle (narrow rows — the hist struct is
         # projected to a bool, SQL aggregates skip the NULL value of
-        # histogram rows, partial aggregation combines map-side); the
-        # old per-group Window pre-pass shuffled every full-width
-        # histogram row a second time, which dominated sum(rate(h[..]))
+        # histogram rows, partial aggregation combines map-side) instead
+        # of a per-group Window pre-pass that shuffled every full-width
+        # histogram row a second time
         from prometheus_spark.engine import hist_arith
 
         # original series sig orders the Kahan fold (the reference sums
@@ -214,50 +216,21 @@ def eval_aggregation(ctx: EvalContext, node: AggregateExpr, vf: VectorFrame, par
         # exchange instead, which Spark reuses across the float and
         # histogram branches.  Cheap-to-recompute plans (plain scans)
         # skip the pre-exchange so the float side keeps its map-side
-        # partial aggregation.  PROMSPARK_AGG_HIST_FORK overrides:
-        # "flags" / "shared" force one strategy, "window" restores the
-        # r9 per-group Window pre-pass (A/B baseline).
-        import os as _os
-
-        strategy = _os.environ.get("PROMSPARK_AGG_HIST_FORK", "auto")
-        if strategy == "auto":
-            strategy = "shared" if _has_python_stage(src) else "flags"
-        if strategy == "window":
-            from pyspark.sql.window import Window as W
-
-            wk = W.partitionBy("sig", "t")
-            flagged = src.withColumn(
-                "__has_f", F.max(v.isNotNull().cast("int")).over(wk)
-            ).withColumn(
-                "__has_h", F.max(F.col("hist").isNotNull().cast("int")).over(wk)
-            )
-            pure = flagged.filter(
-                ~((F.col("__has_f") == 1) & (F.col("__has_h") == 1))
-            )
-            # sig-native fold (round 12): the group sig IS the output
-            # identity; labels stay on gdim until engine finalize
-            hist_rows = pure.filter(F.col("hist").isNotNull()).select(
-                "sig", "t", "hist", "__ord"
-            )
-            hist_part = hist_arith.group_sum(ctx, hist_rows, avg=op == "avg")
-            fact = pure.filter(v.isNotNull()).select(
-                "sig", "t", "value", "drop_name"
-            )
-        else:
-            if strategy == "shared":
-                src = src.repartition(F.col("sig"), F.col("t"))
-            hist_rows = src.filter(F.col("hist").isNotNull()).select(
-                "sig", "t", "hist", "__ord"
-            )
-            hist_part = hist_arith.group_sum(
-                ctx, hist_rows, avg=op == "avg",
-                pre_partitioned=strategy == "shared",
-            )
-            fact = src.select(
-                "sig", "t", "value", "drop_name",
-                F.col("hist").isNotNull().alias("__hh"),
-            )
-            mixed = True
+        # partial aggregation.
+        shared = _has_python_stage(src)
+        if shared:
+            src = src.repartition(F.col("sig"), F.col("t"))
+        hist_rows = src.filter(F.col("hist").isNotNull()).select(
+            "sig", "t", "hist", "__ord"
+        )
+        hist_part = hist_arith.group_sum(
+            ctx, hist_rows, avg=op == "avg", pre_partitioned=shared,
+        )
+        fact = src.select(
+            "sig", "t", "value", "drop_name",
+            F.col("hist").isNotNull().alias("__hh"),
+        )
+        mixed = True
     elif op not in ("count", "group"):
         # float aggregations ignore histogram samples (value NULL) — the
         # reference warns & drops them; count/group/count_values see every

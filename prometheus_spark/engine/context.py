@@ -17,6 +17,12 @@ from pyspark.sql import functions as F
 from prometheus_spark.model.schema import DEFAULT_LOOKBACK_MS
 
 
+# sig_inline_ok's byte budget: inline sig scans win while the scanned
+# sig text stays under a fixed budget plus a per-series allowance
+SIGPAIR_MAX_BYTES = 4_000_000
+SIGPAIR_DIM_EQUIV_BYTES = 100
+
+
 def memo_probe(memo: "dict | None", df: "DataFrame", tag, fn):
     """Run a plan-time probe ``fn(df)`` memoized on (analyzed-plan
     semanticHash, tag).  GIL-atomic dict ops suffice — a concurrent miss
@@ -101,6 +107,11 @@ class EvalContext:
     # pays its probe job once per engine instead of once per query.
     # None (contexts built without an engine) disables memoization.
     probe_memo: "dict | None" = None
+    # False when the engine measured the samples frame as holding no
+    # native-histogram sample (the series dim's init job): float/histogram
+    # routing (range_functions.split_kinds) then skips every histogram
+    # branch.  True (contexts built without an engine) keeps them.
+    hist_samples: bool = True
 
     def probe(self, df: "DataFrame", tag, fn):
         """Run a plan-time probe ``fn(df)`` memoized on (plan, tag).
@@ -130,12 +141,11 @@ class EvalContext:
         vs  join ≈ const_stages + series × c_dim.  Dividing by c_regex
         gives the byte-denominated rule below: inline while the scanned
         sig text stays under a fixed budget (≈ the join's stage
-        round-trips, PROMSPARK_SIGPAIR_MAX_BYTES) plus a per-series
-        allowance (≈ the join's per-series dim work,
-        PROMSPARK_SIGPAIR_DIM_EQUIV_BYTES).  The allowance term is what
-        keeps huge-cardinality INSTANT queries inline — there fact rows
-        == dim rows, so the join can never win — while multi-hundred-
-        step range queries over the same series flip to the join
+        round-trips, SIGPAIR_MAX_BYTES) plus a per-series allowance
+        (≈ the join's per-series dim work, SIGPAIR_DIM_EQUIV_BYTES).
+        The allowance term is what keeps huge-cardinality INSTANT
+        queries inline — there fact rows == dim rows, so the join can
+        never win — while multi-hundred-step range queries over the same series flip to the join
         (measured: 1.1k-series histogram sum × 1000 steps, inline
         1.70 s vs join 0.98 s; the same sum at one step, inline 0.22 s
         vs join 0.24 s; sf10 1:1 instant sum_by, inline 1.07 s vs join
@@ -148,12 +158,6 @@ class EvalContext:
             return False
         if not self.dims_broadcastable:
             return True
-        import os
-
-        cap = float(os.environ.get("PROMSPARK_SIGPAIR_MAX_BYTES", "4000000"))
-        dim_equiv = float(
-            os.environ.get("PROMSPARK_SIGPAIR_DIM_EQUIV_BYTES", "100")
-        )
         if vfs:
             text = 0.0
             series = 0.0
@@ -166,7 +170,10 @@ class EvalContext:
         else:
             series = self.series_count
             text = series * self.avg_sig_bytes
-        return text * self.num_steps <= cap + series * dim_equiv
+        return (
+            text * self.num_steps
+            <= SIGPAIR_MAX_BYTES + series * SIGPAIR_DIM_EQUIV_BYTES
+        )
 
     def dim_hint(self, df: "DataFrame") -> "DataFrame":
         from pyspark.sql import functions as F

@@ -26,6 +26,31 @@ from prometheus_spark.model.schema import DEFAULT_LOOKBACK_MS
 from prometheus_spark.parser import parse_expr
 
 
+# Engine tuning constants.
+#
+# Series-dim row counts under which dim-side joins broadcast
+# (EvalContext.dims_broadcastable) and dim-side dedups run on one
+# partition (EvalContext.dims_tiny).
+DIM_BC_MAX = 2_000_000
+DIM_TINY_MAX = 65_536
+# Estimated result rows under which the result sort runs on ONE range
+# partition.  A global ``orderBy`` plans a range exchange whose
+# partitioner SAMPLES its child — re-executing the entire query chain
+# once just to pick split points (measured: the two window/aggregate
+# stages of ``rate(x[1d])`` each run twice, doubling query CPU).
+# ``repartitionByRange(1, ...)`` skips sampling outright, so small
+# results — most PromQL answers: series × steps rows — pay one parallel
+# map pass plus a single-task merge sort instead of two full
+# executions.  Measured crossover: at 100k rows (100 series × 1000
+# steps) the one-partition sort wins 2-3× on the macro bench; at 450k
+# rows (1500 series × 300 steps, 24 labels) the serial merge sort costs
+# more than re-executing the cheap explode chain (wide-labels bench:
+# rate 2.57 → 1.55 s, binop 2.29 → 1.40 s on the sampled path).
+SORT_ONE_MAX = 200_000
+# Plan-cache construction-time budget (see PromQLEngine.__init__).
+PLAN_CACHE_BUDGET_MS = 30_000.0
+
+
 def _nd_stats(dim2: DataFrame) -> tuple:
     """One fused probe job over the name-drop candidate dim: (row count,
     collision bit).  A collision exists iff the multiset of per-row
@@ -100,12 +125,9 @@ class PromQLEngine:
             OrderedDict()
         )
         self._plan_cache_max = plan_cache_size
-        import os
         import threading
 
-        self._plan_cache_budget_ms = float(
-            os.environ.get("PROMSPARK_PLAN_CACHE_BUDGET_MS", "30000")
-        )
+        self._plan_cache_budget_ms = PLAN_CACHE_BUDGET_MS
         self._plan_cache_cost_ms = 0.0
         self._plan_cache_lock = threading.Lock()
         # plan-time probe memo (EvalContext.probe): collision bits, dim
@@ -116,6 +138,7 @@ class PromQLEngine:
         self._dims_broadcastable = False
         self._dims_tiny = False
         self._sig_pairs_ok = False
+        self._hist_samples = True
         self._series_count = 0
         self._avg_sig_bytes = 64.0
         self._name_stats: Optional[dict] = None
@@ -172,10 +195,11 @@ class PromQLEngine:
             # one aggregate materializes the cache AND probes it: the
             # count sizes broadcast/tiny hints (see EvalContext.dim_hint)
             # and the separator scan decides sig-pair-filter eligibility
-            # (labels.sig_subset_sql) — fused into the same job so engine
-            # init still runs exactly one dim pass
-            import os
-
+            # (labels.sig_subset_sql), and max(__has_h) tells whether any
+            # series holds a histogram sample at all (split_kinds) — fused
+            # into the same job so engine init still runs exactly one dim
+            # pass
+            has_h = "__has_h" in self._series_dim.columns
             row = self._series_dim.selectExpr(
                 "count(*) AS n",
                 "max(CAST(exists(map_entries(labels), e -> "
@@ -183,21 +207,15 @@ class PromQLEngine:
                 "OR instr(e.value, '\\u001E') > 0 OR instr(e.value, '\\u001F') > 0"
                 ") AS INT)) AS bad",
                 "coalesce(CAST(avg(length(sig)) AS DOUBLE), 64.0D) AS alen",
+                ("coalesce(max(__has_h), 0)" if has_h else "0") + " AS hh",
             ).head()
             n = row["n"]
             self._series_count = n
             self._avg_sig_bytes = float(row["alen"])
-            sigpair_env = os.environ.get("PROMSPARK_SIGPAIR", "auto")
-            if sigpair_env == "0":
-                self._sig_pairs_ok = False
-            else:
-                self._sig_pairs_ok = (row["bad"] or 0) == 0
-            self._dims_broadcastable = n <= int(
-                os.environ.get("PROMSPARK_DIM_BC_MAX", "2000000")
-            )
-            self._dims_tiny = n <= int(
-                os.environ.get("PROMSPARK_DIM_TINY_MAX", "65536")
-            )
+            self._sig_pairs_ok = (row["bad"] or 0) == 0
+            self._hist_samples = row["hh"] == 1
+            self._dims_broadcastable = n <= DIM_BC_MAX
+            self._dims_tiny = n <= DIM_TINY_MAX
             # Per-metric-name stats {name: (series, avg_sig_len)} feed
             # selector cardinality estimates (VectorFrame.est_series →
             # EvalContext.sig_inline_ok).  Only collected when the dim
@@ -262,6 +280,7 @@ class PromQLEngine:
             dims_broadcastable=self._dims_broadcastable,
             dims_tiny=self._dims_tiny,
             sig_pairs_ok=self._sig_pairs_ok,
+            hist_samples=self._hist_samples,
             series_count=self._series_count,
             avg_sig_bytes=self._avg_sig_bytes,
             name_stats=self._name_stats,
@@ -358,7 +377,7 @@ class PromQLEngine:
                 out = result.df.select(
                     F.lit("").alias("sig"), empty.alias("labels"), "t", "value"
                 )
-                if ctx.num_steps <= self._sort_one_max():
+                if ctx.num_steps <= SORT_ONE_MAX:
                     out = out.repartitionByRange(1, "t").sortWithinPartitions("t")
                 else:
                     out = out.orderBy("t")
@@ -373,35 +392,10 @@ class PromQLEngine:
                 return out
             raise TypeError(f"unexpected result {type(result).__name__}")
 
-    def _sort_one_max(self) -> int:
-        """Estimated-row cap under which the result sort runs on ONE
-        range partition.  A global ``orderBy`` plans a range exchange
-        whose partitioner SAMPLES its child — re-executing the entire
-        query chain once just to pick split points (measured: the two
-        window/aggregate stages of ``rate(x[1d])`` each run twice,
-        doubling query CPU).  ``repartitionByRange(1, ...)`` skips
-        sampling outright (RangePartitioner computes no bounds for a
-        single partition), so small results — the overwhelming majority
-        of PromQL answers: series × steps rows — pay one parallel map
-        pass plus a single-task merge sort instead of two full
-        executions.  Large results keep the sampled range sort, whose
-        parallel sort amortizes the double execution.
-
-        The default crossover is measured, not guessed: at 100k rows
-        (100 series × 1000 steps) the one-partition sort wins 2-3× on
-        the macro bench; at 450k rows (1500 series × 300 steps, 24
-        labels) the serial merge sort costs more than re-executing the
-        cheap explode chain (wide-labels bench: rate 2.57 → 1.55 s,
-        binop 2.29 → 1.40 s on the sampled path).  200k sits between
-        the measured win and loss points."""
-        import os
-
-        return int(os.environ.get("PROMSPARK_SORT_ONE_MAX", "200000"))
-
     def _ordered_out(self, out: DataFrame, dim, num_steps, dim_rows=None) -> DataFrame:
         small = False
         if num_steps is not None and num_steps > 0 and dim is not None:
-            need = self._sort_one_max() // num_steps + 1
+            need = SORT_ONE_MAX // num_steps + 1
             if dim_rows is not None:
                 # row count already known from the fused finalize probe
                 small = dim_rows < need

@@ -355,7 +355,7 @@ class Evaluator:
                     raise PromQLEvalError(f"{mode} modifier cannot be used with {fn}")
                 return _att(RF.eval_range_function(
                     ctx, fn, w, rng, self._scalar(node.args[1]), self._scalar(node.args[2]),
-                    dim=dim,
+                    dim=dim, stored=isinstance(m_node, MatrixSelector),
                 ), m_node.selector if isinstance(m_node, MatrixSelector) else None)
             m_idx = 1 if fn == "quantile_over_time" else 0
             m_node = node.args[m_idx]
@@ -392,7 +392,7 @@ class Evaluator:
                 if (
                     fn in ("rate", "increase", "delta")
                     and not ctx.is_instant
-                    and "hist" in ctx.samples.columns
+                    and RF.hist_possible(ctx, ctx.samples)
                     and rng // ctx.step_ms >= RF.hist_asof_threshold()
                 ):
                     return _att(RF.eval_rate_hybrid(
@@ -422,7 +422,10 @@ class Evaluator:
                     ), m_node.selector)
             w, dim, rng, mode = self._matrix_arg(node.args[m_idx])
             return _att(
-                RF.eval_range_function(ctx, fn, w, rng, param, mode=mode, dim=dim),
+                RF.eval_range_function(
+                    ctx, fn, w, rng, param, mode=mode, dim=dim,
+                    stored=isinstance(m_node, MatrixSelector),
+                ),
                 m_node.selector if isinstance(m_node, MatrixSelector) else None,
             )
 

@@ -57,6 +57,13 @@ _KEEPS_NAME = frozenset({"last_over_time", "first_over_time"})
 
 _ANCHORED_SAFE = frozenset({"resets", "changes", "rate", "increase", "delta"})
 _SMOOTHED_SAFE = frozenset({"rate", "increase", "delta"})
+# functions whose windows route by float/histogram kind (split_kinds)
+_KIND_SPLIT_FUNCS = frozenset(
+    {
+        "rate", "increase", "delta", "sum_over_time", "avg_over_time",
+        "idelta", "irate", "resets", "changes",
+    }
+)
 
 
 # ---------------------------------------------------------------------
@@ -101,6 +108,7 @@ def eval_range_function(
     param2=None,
     mode: str = None,
     dim: DataFrame = None,
+    stored: bool = False,
 ) -> VectorFrame:
     """windowed: (sig, t, sample_t, value) — one row per sample per
     step window, labels-free (split frame contract; ``dim`` carries the
@@ -108,6 +116,8 @@ def eval_range_function(
     never change a labelset, only the drop_name flag).  ``mode`` selects
     the experimental anchored/smoothed semantics (boundary samples
     included, no extrapolation — functions.go:309 ``extendedRate``).
+    ``stored`` says the windows hold rows of the samples frame itself,
+    whose per-series kinds the engine series dim knows (split_kinds).
     The histogram branches feed hist_arith's sig-native folds directly
     (round 12) — no labels join on either side of the fold."""
     if mode is not None:
@@ -117,112 +127,88 @@ def eval_range_function(
                 f"{mode} modifier can only be used with: "
                 f"{', '.join(sorted(safe))} - not with {func}"
             )
+        floats, hists, mixed = split_kinds(ctx, windowed, stored, per_window=True)
         if func in ("rate", "increase", "delta"):
-            float_w, hist_w = _split_windows(windowed, "hist" in windowed.columns)
             out = _extended_delta(
-                ctx, float_w, range_ms,
+                ctx, floats, range_ms,
                 is_counter=func != "delta", is_rate=func == "rate",
                 smoothed=mode == "smoothed",
             )
-            if hist_w is not None:
+            if hists is not None:
                 from prometheus_spark.engine import hist_arith
 
                 out = _union_hist(
                     out,
                     hist_arith.window_extended_rate(
-                        ctx, hist_w, range_ms,
+                        ctx, hists, range_ms,
                         is_counter=func != "delta", is_rate=func == "rate",
                         smoothed=mode == "smoothed",
                     ),
                 )
         else:  # resets / changes over the materialized extended window
-            if "hist" in windowed.columns:
-                w = Window.partitionBy("sig", "t")
-                flagged = windowed.withColumn(
-                    "__has_h", F.max(F.col("hist").isNotNull().cast("int")).over(w)
-                )
+            out = _resets_changes(ctx, floats, func)
+            if hists is not None:
                 from prometheus_spark.engine import hist_arith
 
                 out = _union_hist(
-                    _resets_changes(ctx, flagged.filter(F.col("__has_h") == 0), func),
+                    out,
                     hist_arith.window_resets_changes(
-                        ctx, flagged.filter(F.col("__has_h") == 1), func
+                        ctx, hists.unionByName(mixed), func
                     ),
                 )
-            else:
-                out = _resets_changes(ctx, windowed, func)
         return VectorFrame(fact=out, dim=dim)
     # windows may contain histogram samples (value NULL, hist non-null):
     # rate/sum/avg aggregate all-histogram windows through the histogram
-    # algebra and drop mixed windows (reference warns); other float
-    # functions compute over the float samples; count/present see all.
-    has_hist = "hist" in windowed.columns
+    # algebra and drop mixed windows (reference warns); irate/idelta/
+    # resets/changes send every histogram-bearing window to the
+    # histogram algebra; other float functions compute over the float
+    # samples; count/present see all.
     floats_only = windowed.filter(F.col("value").isNotNull())
+    if func in _KIND_SPLIT_FUNCS:
+        floats, hists, mixed = split_kinds(ctx, windowed, stored, per_window=True)
+        floats = floats.filter(F.col("value").isNotNull())
     if func in ("rate", "increase", "delta"):
-        float_w, hist_w = _split_windows(windowed, has_hist)
-        out = _extrapolated(ctx, float_w, range_ms, is_counter=func != "delta", is_rate=func == "rate")
-        if hist_w is not None:
+        out = _extrapolated(ctx, floats, range_ms, is_counter=func != "delta", is_rate=func == "rate")
+        if hists is not None:
             from prometheus_spark.engine import hist_arith
 
             out_h = hist_arith.window_rate(
-                ctx, hist_w, range_ms,
+                ctx, hists, range_ms,
                 is_counter=func != "delta", is_rate=func == "rate",
             )
             out = _union_hist(out, out_h)
-    elif func in ("sum_over_time", "avg_over_time") and has_hist:
-        float_w, hist_w = _split_windows(windowed, has_hist)
-        out = _simple_over_time(ctx, float_w, func)
-        if hist_w is not None:
+    elif func in ("sum_over_time", "avg_over_time"):
+        out = _simple_over_time(ctx, floats, func)
+        if hists is not None:
             from prometheus_spark.engine import hist_arith
 
             out_h = hist_arith.group_sum(
                 ctx,
-                hist_w.select("sig", "t", "hist", "sample_t"),
+                hists.select("sig", "t", "hist", "sample_t"),
                 avg=func == "avg_over_time",
                 drop_name=True,
                 order_col="sample_t",
             )
             out = _union_hist(out, out_h)
-    elif func in ("first_over_time", "last_over_time") and has_hist:
+    elif func in ("first_over_time", "last_over_time") and hist_possible(ctx, windowed):
         out = _first_last_hist(ctx, windowed, func)
     elif func in ("ts_of_first_over_time", "ts_of_last_over_time"):
         # histogram samples count for the first/last timestamps too
         out = _simple_over_time(ctx, windowed, func)
-    elif func in ("idelta", "irate"):
-        if has_hist:
-            w = Window.partitionBy("sig", "t")
-            flagged = windowed.withColumn(
-                "__has_h", F.max(F.col("hist").isNotNull().cast("int")).over(w)
-            )
+    elif func in ("idelta", "irate", "resets", "changes"):
+        if func in ("idelta", "irate"):
+            out = _instant_pair(ctx, floats, is_rate=func == "irate")
+        else:
+            out = _resets_changes(ctx, floats, func)
+        if hists is not None:
             from prometheus_spark.engine import hist_arith
 
-            out = _union_hist(
-                _instant_pair(
-                    ctx, flagged.filter(F.col("__has_h") == 0), is_rate=func == "irate"
-                ),
-                hist_arith.window_instant_pair(
-                    ctx, flagged.filter(F.col("__has_h") == 1),
-                    is_rate=func == "irate",
-                ),
-            )
-        else:
-            out = _instant_pair(ctx, floats_only, is_rate=func == "irate")
-    elif func in ("resets", "changes"):
-        if has_hist:
-            w = Window.partitionBy("sig", "t")
-            flagged = windowed.withColumn(
-                "__has_h", F.max(F.col("hist").isNotNull().cast("int")).over(w)
-            )
-            from prometheus_spark.engine import hist_arith
-
-            out = _union_hist(
-                _resets_changes(ctx, flagged.filter(F.col("__has_h") == 0), func),
-                hist_arith.window_resets_changes(
-                    ctx, flagged.filter(F.col("__has_h") == 1), func
-                ),
-            )
-        else:
-            out = _resets_changes(ctx, floats_only, func)
+            hw = hists.unionByName(mixed)
+            if func in ("idelta", "irate"):
+                out_h = hist_arith.window_instant_pair(ctx, hw, is_rate=func == "irate")
+            else:
+                out_h = hist_arith.window_resets_changes(ctx, hw, func)
+            out = _union_hist(out, out_h)
     elif func in ("deriv", "predict_linear"):
         out = _linreg(ctx, floats_only, param)
     elif func == "double_exponential_smoothing":
@@ -238,25 +224,6 @@ def eval_range_function(
 
 def _grouped(windowed: DataFrame):
     return windowed.groupBy("sig", "t")
-
-
-def _split_windows(windowed: DataFrame, has_hist: bool):
-    """Per-(sig, t) window kind flags: all-float windows stay JVM-side,
-    all-histogram windows go to the histogram algebra, mixed windows are
-    dropped (the reference warns and skips the series)."""
-    if not has_hist:
-        return windowed.filter(F.col("value").isNotNull()), None
-    w = Window.partitionBy("sig", "t")
-    flagged = windowed.withColumn(
-        "__has_f", F.max(F.col("value").isNotNull().cast("int")).over(w)
-    ).withColumn("__has_h", F.max(F.col("hist").isNotNull().cast("int")).over(w))
-    float_w = flagged.filter(
-        (F.col("__has_f") == 1) & (F.col("__has_h") == 0)
-    ).drop("__has_f", "__has_h")
-    hist_w = flagged.filter(
-        (F.col("__has_h") == 1) & (F.col("__has_f") == 0)
-    ).drop("__has_f", "__has_h")
-    return float_w, hist_w
 
 
 def _union_hist(float_out: DataFrame, hist_out: DataFrame) -> DataFrame:
@@ -681,20 +648,16 @@ def eval_extended_rate_fold(
     dim = selector_dim(ctx, selector.matchers, base.filter(scoped_pred))
 
     hist_out = None
-    if "hist" in base.columns:
-        flagged = base.join(_kind_flags(ctx, base), "sig")
-        base_f = flagged.filter(F.col("__has_h") == 0).drop("__has_h", "__has_f")
-        hseries = flagged.filter(F.col("__has_h") == 1).drop("__has_h", "__has_f")
+    base_f, hists, mixed = split_kinds(ctx, base, stored=True)
+    if hists is not None:
         hw, hdim = extended_windowed_samples(
             ctx, selector, range_ms, offset_ms=offset_ms,
-            smoothed=smoothed, base=hseries,
+            smoothed=smoothed, base=hists.unionByName(mixed),
         )
         hist_out = eval_range_function(
             ctx, func, hw, range_ms,
-            mode="smoothed" if smoothed else "anchored", dim=hdim,
+            mode="smoothed" if smoothed else "anchored", dim=hdim, stored=True,
         ).fact
-    else:
-        base_f = base
 
     adj = base_f.filter(scoped_pred).selectExpr(
         "sig", "t", "CAST(value AS DOUBLE) AS value"
@@ -961,12 +924,7 @@ def _pyfold_repartition(ctx: EvalContext, df: DataFrame) -> DataFrame:
     clustering requirement, so no second exchange is planned.  2× the
     scheduler parallelism keeps hash-placement skew (a few series per
     task) from doubling the stage wall."""
-    import os
-
-    p = int(
-        os.environ.get("PROMSPARK_PYFOLD_PARTITIONS", "0")
-    ) or 2 * ctx.spark.sparkContext.defaultParallelism
-    return df.repartition(p, "sig")
+    return df.repartition(2 * ctx.spark.sparkContext.defaultParallelism, "sig")
 
 
 # ---------------------------------------------------------------------
@@ -987,22 +945,14 @@ def eval_range_function_prefix(
     window per step, engine.go matrixIterSlice); the windowed-explode
     plan replays each sample in every window instead, which costs
     range/step × the input (8640× for ``rate(x[1d])`` at a 10s step).
-    This path restores the O(samples) shape with set operations:
-
-    1. one pass over the matched samples computes, per series in
-       timestamp order, the sample index and prefix sums of counter
-       drops / change flags / reset flags (window functions over ONE
-       sort);
-    2. two boundary PROBES per (series, step) — at the window end and
-       the window start — are unioned into the same sort; an ascending
-       carry gives the last sample ≤ wend (the window's LAST sample +
-       its prefix stats), a descending carry gives the first sample >
-       wstart (the window's FIRST sample + its stats);
-    3. every window statistic follows by subtraction: n = idxᵦ − idxₐ+1,
-       correction = cumdropᵦ − cumdropₐ (the straddling pair drops out
-       exactly because cumₐ includes it), changes/resets likewise; the
-       rate family feeds the SAME ``_extrapolate_from_stats`` arithmetic
-       as the explode path.
+    This path restores the O(samples) shape: each series' samples ship
+    once into an Arrow batch (:func:`_prefix_stats_arrow`), where two
+    ``np.searchsorted`` calls find every window's first and last sample
+    and prefix sums of counter drops / change flags / reset flags give
+    every window statistic by subtraction (n = idxᵦ − idxₐ + 1,
+    correction = cumdropᵦ − cumdropₐ, changes/resets likewise); the rate
+    family feeds the SAME ``_extrapolate_from_stats`` arithmetic as the
+    explode path.
 
     Series carrying native histograms are routed to the explode path
     (mixed-window drop semantics live there); both halves union.
@@ -1011,7 +961,6 @@ def eval_range_function_prefix(
         matcher_predicate,
         windowed_samples,
     )
-    from pyspark.sql.window import Window as W
 
     base = ctx.samples.filter(
         matcher_predicate(selector.matchers, ctx.samples.columns)
@@ -1019,7 +968,6 @@ def eval_range_function_prefix(
     lo = ctx.start_ms - offset_ms - range_ms
     hi = ctx.end_ms - offset_ms
     base = base.filter((F.col("t") > lo) & (F.col("t") <= hi))
-    has_hist = "hist" in base.columns
     st = F.col("st") if "st" in base.columns else F.lit(None).cast("long")
     cols = [F.col("sig"), F.col("t"), F.col("value"), st.alias("st")]
     # one labels dim for the whole call (float fast path + hist halves)
@@ -1027,75 +975,37 @@ def eval_range_function_prefix(
 
     dim = selector_dim(ctx, selector.matchers, base)
 
+    # pure-float series stay on the float fast path; for the rate family
+    # pure-histogram series take the as-of path (same O(samples + steps)
+    # shape, no window explode — hist_arith.window_rate_asof) and mixed
+    # series the explode path, which owns per-window float/mixed
+    # routing; other functions send every histogram-bearing series to
+    # the explode path
+    floats, hists, mixed = split_kinds(ctx, base, stored=True)
+    base_f = floats.select(*cols)
     hist_out = None
-    if has_hist:
-        # histogram-carrying series split three ways: pure-histogram
-        # series take the as-of path for the rate family (same
-        # O(samples + steps) shape as the float fast path, no window
-        # explode — hist_arith.window_rate_asof); mixed float+hist
-        # series go to the explode path, which owns per-window
-        # float/mixed routing (_split_windows); pure-float series stay
-        # on the float fast path.  Per-series kind flags come from a
-        # NARROW aggregate joined back (map-side combined to one row
-        # per series; the scan runs once per consumer but prunes to
-        # sig+kind bits) instead of a per-sig Window — the Window
-        # shuffled and sorted every full-width histogram row before a
-        # single useful op ran.
-        import os as _os
-
-        if _os.environ.get("PROMSPARK_RATE_KINDS_JOIN", "1") == "0":
-            flagged = base.withColumn(
-                "__has_h",
-                F.max(F.col("hist").isNotNull().cast("int")).over(
-                    W.partitionBy("sig")
-                ),
-            ).withColumn(
-                "__has_f",
-                F.max(F.col("value").isNotNull().cast("int")).over(
-                    W.partitionBy("sig")
-                ),
-            )
-        else:
-            # engine series dim flags when available (no per-query
-            # scan); fallback aggregate keeps runtime-decided joins —
-            # a forced broadcast of a 10M-series family would pin the
-            # driver at 100TB scale (dim_hint handles that cutoff)
-            flagged = base.join(_kind_flags(ctx, base), "sig")
-        base_f = flagged.filter(F.col("__has_h") == 0).select(*cols)
+    if hists is not None:
         from prometheus_spark.engine import hist_arith
 
         if func in ("rate", "increase", "delta"):
-            pure_h = flagged.filter(
-                (F.col("__has_h") == 1) & (F.col("__has_f") == 0)
-            ).drop("__has_h", "__has_f")
-            mixed = flagged.filter(
-                (F.col("__has_h") == 1) & (F.col("__has_f") == 1)
-            ).drop("__has_h", "__has_f")
             hist_out = hist_arith.window_rate_asof(
-                ctx, pure_h, range_ms, offset_ms,
+                ctx, hists, range_ms, offset_ms,
                 is_counter=func != "delta", is_rate=func == "rate",
             )
-            mw, mdim = windowed_samples(ctx, mixed, range_ms, offset_ms=offset_ms)
-            hist_out = hist_out.unionByName(
-                eval_range_function(ctx, func, mw, range_ms, dim=mdim).fact,
-                allowMissingColumns=True,
-            )
+            hseries = mixed
         else:
-            hseries = flagged.filter(F.col("__has_h") == 1).drop(
-                "__has_h", "__has_f"
-            )
-            # lazily evaluated: zero hist series → empty explode input
-            hw, hdim = windowed_samples(ctx, hseries, range_ms, offset_ms=offset_ms)
-            hist_out = eval_range_function(ctx, func, hw, range_ms, dim=hdim).fact
-    else:
-        base_f = base.select(*cols)
+            hseries = hists.unionByName(mixed)
+        # lazily evaluated: zero hist series → empty explode input
+        hw, hdim = windowed_samples(ctx, hseries, range_ms, offset_ms=offset_ms)
+        explode_out = eval_range_function(
+            ctx, func, hw, range_ms, dim=hdim, stored=True
+        ).fact
+        hist_out = (
+            explode_out if hist_out is None
+            else hist_out.unionByName(explode_out, allowMissingColumns=True)
+        )
 
-    import os as _os2
-
-    if _os2.environ.get("PROMSPARK_PREFIX_IMPL", "arrow") == "arrow":
-        stats = _prefix_stats_arrow(ctx, base_f, range_ms, offset_ms)
-    else:
-        stats = _prefix_stats_sql(ctx, base_f, range_ms, offset_ms)
+    stats = _prefix_stats_arrow(ctx, base_f, range_ms, offset_ms)
 
     if func in ("rate", "increase", "delta"):
         if func == "delta":
@@ -1131,18 +1041,16 @@ def _prefix_stats_arrow(
 ) -> DataFrame:
     """Per-(series, step) window stats via a vectorized Arrow fold.
 
-    The SQL formulation below (:func:`_prefix_stats_sql`) interleaves
-    2·steps probe rows per series with the samples and carries five
-    running window expressions over two intra-partition sorts — ~70 ms
-    of interpreted WindowExec CPU per 1k-sample series (measured 77 s
-    CPU for h_hundred's 1,100 series).  The same math per series is two
-    ``np.searchsorted`` calls plus three ``np.cumsum`` prefix arrays —
-    microseconds.  Samples ship ONCE into Arrow batches (sig, t, value,
-    st — no labels, split frame contract) and the emitted stats frame
-    feeds the identical JVM ``_extrapolate_from_stats`` arithmetic, so
-    extrapolation semantics (and their corpus pins) are untouched.
-    Flag order, drop accumulation and boundary sides replicate the SQL
-    path exactly; ``PROMSPARK_PREFIX_IMPL=sql`` forces the old plan."""
+    A pure-Catalyst formulation (2·steps probe rows per series
+    interleaved with the samples, five running window expressions over
+    two sorts) cost ~70 ms of interpreted WindowExec CPU per 1k-sample
+    series (77 s CPU for h_hundred's 1,100 series).  The same math per
+    series is two ``np.searchsorted`` calls plus three ``np.cumsum``
+    prefix arrays — microseconds.  Samples ship ONCE into Arrow batches
+    (sig, t, value, st — no labels, split frame contract) and the
+    emitted stats frame feeds the identical JVM
+    ``_extrapolate_from_stats`` arithmetic, so extrapolation semantics
+    (and their corpus pins) are untouched."""
     import numpy as np
     import pandas as pd
 
@@ -1210,8 +1118,8 @@ def _prefix_stats_arrow(
                 )
                 reset = reset | st_reset
             # NB: an ST-implied reset can fire with pv=NaN, making the
-            # correction NaN — matching the SQL path, whose
-            # coalesce(prev_v, 0.0) passes NaN through (NaN is not null)
+            # correction NaN — matching the explode path (_extrapolated),
+            # which adds the previous value on any reset, NaN included
             drop = np.where(reset, pv, 0.0)
             cum_drop = np.concatenate(([0.0], np.cumsum(drop)))
             cum_res = np.concatenate(([0], np.cumsum(reset.astype(np.int64))))
@@ -1270,138 +1178,6 @@ def _prefix_stats_arrow(
         F.coalesce(F.col("correction"), _NAN()).alias("correction"),
         "__resets", "__changes",
     )
-
-
-def _prefix_stats_sql(
-    ctx: EvalContext, base_f: DataFrame, range_ms: int, offset_ms: int
-) -> DataFrame:
-    """The original pure-Catalyst stats plan (probe rows + running
-    windows) — kept selectable via PROMSPARK_PREFIX_IMPL=sql for
-    parity A/Bs and as the no-Python fallback."""
-    from pyspark.sql.window import Window as W
-
-    samples = base_f.select(
-        "sig",
-        F.col("t").alias("pt"), F.lit(0).alias("ord"),
-        F.lit(None).cast("string").alias("kind"),
-        F.lit(None).cast("long").alias("step_t"),
-        "value", "st",
-    )
-    sigs = base_f.select("sig").distinct()
-    bounds = ctx.grid.select(
-        F.col("t").alias("step_t"),
-        (F.col("t") - offset_ms).alias("__wend"),
-    )
-    probes = (
-        sigs.crossJoin(F.broadcast(bounds))
-        .select(
-            "sig", "step_t",
-            F.explode(
-                F.array(
-                    F.struct(F.lit("e").alias("kind"),
-                             F.col("__wend").alias("pt")),
-                    F.struct(F.lit("s").alias("kind"),
-                             (F.col("__wend") - range_ms).alias("pt")),
-                )
-            ).alias("__p"),
-        )
-        .select(
-            "sig", F.col("__p.pt").alias("pt"),
-            F.lit(1).alias("ord"), F.col("__p.kind").alias("kind"),
-            "step_t",
-            F.lit(None).cast("double").alias("value"),
-            F.lit(None).cast("long").alias("st"),
-        )
-    )
-    tall = samples.unionByName(probes)
-
-    asc = W.partitionBy("sig").orderBy("pt", "ord")
-    before = asc.rowsBetween(W.unboundedPreceding, -1)
-    upto = asc.rowsBetween(W.unboundedPreceding, W.currentRow)
-    is_sample = F.col("ord") == 0
-
-    prev = F.last(
-        F.when(is_sample, F.struct("pt", "value", "st")), ignorenulls=True
-    ).over(before)
-    cur_v, prev_v = F.col("value"), prev["value"]
-    value_reset = (~F.isnan(cur_v)) & (~F.isnan(prev_v)) & (cur_v < prev_v)
-    st_reset = _st_reset_expr(prev["st"], prev["pt"], F.col("st"), F.col("pt"))
-    counter_reset = F.when(
-        is_sample & prev.isNotNull(), value_reset | st_reset
-    ).otherwise(F.lit(False))
-    changed = F.when(
-        is_sample & prev.isNotNull(),
-        (cur_v != prev_v) & ~(F.isnan(cur_v) & F.isnan(prev_v)),
-    ).otherwise(F.lit(False))
-
-    step1 = tall.select(
-        "*",
-        F.sum(is_sample.cast("long")).over(upto).alias("idx"),
-        F.when(counter_reset, F.coalesce(prev_v, F.lit(0.0)))
-        .otherwise(F.lit(0.0)).alias("__drop"),
-        counter_reset.cast("long").alias("__res"),
-        changed.cast("long").alias("__chg"),
-    )
-    step2 = step1.select(
-        "*",
-        F.sum("__drop").over(upto).alias("cum_drop"),
-        F.sum("__res").over(upto).alias("cum_res"),
-        F.sum("__chg").over(upto).alias("cum_chg"),
-        F.last(
-            F.when(is_sample, F.struct(F.col("pt").alias("t"), "value")),
-            ignorenulls=True,
-        ).over(upto).alias("__b"),
-    )
-    # backward carry: the first sample AFTER the window start, found by
-    # a descending re-sort.  (A [1, unboundedFollowing] frame on the
-    # ascending order would avoid the second sort but Spark's
-    # unbounded-following frame processor re-scans the remainder per
-    # row — measured O(n²), 8× worse than the sort.)
-    desc = (
-        W.partitionBy("sig")
-        .orderBy(F.desc("pt"), F.desc("ord"))
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    step3 = step2.select(
-        "*",
-        F.last(
-            F.when(
-                is_sample,
-                F.struct(
-                    F.col("pt").alias("t"), "value", "st", "idx",
-                    "cum_drop", "cum_res", "cum_chg",
-                ),
-            ),
-            ignorenulls=True,
-        ).over(desc).alias("__a"),
-    )
-
-    pr = step3.filter(F.col("kind").isNotNull())
-    stats = pr.groupBy("sig", "step_t").agg(
-        F.max(F.when(F.col("kind") == "e", F.struct(
-            "idx", "cum_drop", "cum_res", "cum_chg",
-            F.col("__b")["t"].alias("b_t"), F.col("__b")["value"].alias("b_v"),
-        ))).alias("e"),
-        F.max(F.when(F.col("kind") == "s", F.col("__a"))).alias("a"),
-    )
-    e, a = F.col("e"), F.col("a")
-    wend = F.col("step_t") - F.lit(offset_ms)
-    wstart = wend - F.lit(range_ms)
-    valid = (
-        e["b_t"].isNotNull() & (e["b_t"] > wstart)
-        & a["t"].isNotNull() & (a["t"] <= wend)
-    )
-    stats = stats.filter(valid).select(
-        "sig", F.col("step_t").alias("t"), wend.alias("wend"),
-        (e["idx"] - a["idx"] + 1).alias("n"),
-        a["t"].alias("first_t"), e["b_t"].alias("last_t"),
-        a["value"].alias("first_v"), e["b_v"].alias("last_v"),
-        a["st"].alias("st0"),
-        (e["cum_drop"] - a["cum_drop"]).alias("correction"),
-        (e["cum_res"] - a["cum_res"]).cast("double").alias("__resets"),
-        (e["cum_chg"] - a["cum_chg"]).cast("double").alias("__changes"),
-    )
-    return stats
 
 
 def eval_des_asof(
@@ -1552,33 +1328,81 @@ def hist_asof_threshold() -> int:
     path there).  Histogram windows are Python-cost dominated — the
     explode multiplies ``from_row`` deserializations and shuffle bytes
     by the ratio, so as-of wins for histograms at ratios where the
-    float explode still wins.  The hybrid costs one extra per-sig window
-    pass to split series, so it only engages on storage whose schema
-    carries a hist column.  Override with PROMSPARK_HIST_ASOF_THRESHOLD."""
+    float explode still wins.  The hybrid only engages when the samples
+    frame can hold a histogram (:func:`hist_possible`).  Override with
+    PROMSPARK_HIST_ASOF_THRESHOLD."""
     import os
 
     return int(os.environ.get("PROMSPARK_HIST_ASOF_THRESHOLD", "4"))
 
 
-def _kind_flags(ctx: EvalContext, base: DataFrame) -> DataFrame:
-    """(sig, __has_h, __has_f) per series, for float/hist/mixed routing.
+def hist_possible(ctx: EvalContext, df: DataFrame) -> bool:
+    """Can ``df`` hold a native-histogram sample?  False when it has no
+    ``hist`` column or the engine measured its samples frame as holding
+    none (``EvalContext.hist_samples``; no PromQL function makes a
+    histogram out of floats) — callers then skip their histogram branch
+    and its union."""
+    return "hist" in df.columns and ctx.hist_samples
 
-    Preferred source: the engine series dim, which carries whole-frame
-    kind flags computed once per samples frame (a TSDB series index
-    knows its series' sample types) — rate queries then skip the
-    per-query full-scan kinds aggregation entirely.  Whole-frame flags
-    are CONSERVATIVE under the query's time filter: globally-pure-hist
-    ⊆ in-window-pure-hist (the fast paths' requirement), and any
-    global mix routes to the explode path, which is correct for every
-    per-window kind.  Fallback (contexts without an engine): the
-    narrow aggregate over the matched rows."""
-    sd = ctx.series_dim
-    if sd is not None and "__has_h" in sd.columns:
-        return ctx.dim_hint(sd.select("sig", "__has_h", "__has_f"))
-    return base.groupBy("sig").agg(
-        F.max(F.col("hist").isNotNull().cast("int")).alias("__has_h"),
-        F.max(F.col("value").isNotNull().cast("int")).alias("__has_f"),
+
+def split_kinds(
+    ctx: EvalContext, df: DataFrame, stored: bool, per_window: bool = False
+) -> tuple:
+    """The float/native-histogram routing decision → ``(floats, hists,
+    mixed)`` row subsets of ``df``.
+
+    Per series: ``floats`` holds the rows of series with only float
+    samples, ``hists`` of series with only histograms, ``mixed`` the
+    rest.  The kinds come from the engine series dim (a TSDB's series
+    index knows each series' sample type), joined by sig; contexts
+    without an engine aggregate them from ``df``.  Whole-frame kinds are
+    conservative under a query's time filter: a series pure over the
+    whole frame is pure in every window.  Only ``stored`` frames — rows
+    of the samples frame itself — may read them: a derived frame (a
+    subquery's output) keeps its input's sigs but not their kinds
+    (``histogram_count(h)`` is float), so all its rows count as mixed,
+    as does any sig missing from the dim.
+
+    ``per_window`` splits the mixed series' rows further by their
+    (sig, t) window: all-float windows join ``floats``, all-histogram
+    windows join ``hists`` and ``mixed`` keeps the windows holding both.
+    Pure series never meet that Window.
+
+    When ``df`` cannot hold a histogram (:func:`hist_possible`) the
+    result is ``(df, None, None)``."""
+    if not hist_possible(ctx, df):
+        return df, None, None
+    cols = df.columns
+    if not stored:
+        flagged = df.withColumn("__kind", F.lit("m"))
+    else:
+        sd = ctx.series_dim
+        if sd is not None and "__has_h" in sd.columns:
+            kinds = ctx.dim_hint(sd.select("sig", "__has_h", "__has_f"))
+        else:
+            kinds = df.groupBy("sig").agg(
+                F.max(F.col("hist").isNotNull().cast("int")).alias("__has_h"),
+                F.max(F.col("value").isNotNull().cast("int")).alias("__has_f"),
+            )
+        flagged = df.join(kinds, "sig", "left").selectExpr(
+            *[f"`{c}`" for c in cols],
+            "CASE WHEN __has_h = 0 THEN 'f' WHEN __has_f = 0 THEN 'h' "
+            "ELSE 'm' END AS __kind",
+        )
+    floats, hists, mixed = (
+        flagged.filter(F.col("__kind") == k).select(*cols) for k in "fhm"
     )
+    if per_window:
+        w = Window.partitionBy("sig", "t")
+        mw = mixed.select(
+            *cols,
+            F.max(F.col("value").isNotNull().cast("int")).over(w).alias("__wf"),
+            F.max(F.col("hist").isNotNull().cast("int")).over(w).alias("__wh"),
+        )
+        floats = floats.unionByName(mw.filter("__wh = 0").select(*cols))
+        hists = hists.unionByName(mw.filter("__wf = 0").select(*cols))
+        mixed = mw.filter("__wf = 1 AND __wh = 1").select(*cols)
+    return floats, hists, mixed
 
 
 def eval_rate_hybrid(
@@ -1607,25 +1431,15 @@ def eval_rate_hybrid(
     lo = ctx.start_ms - offset_ms - range_ms
     hi = ctx.end_ms - offset_ms
     base = base.filter((F.col("t") > lo) & (F.col("t") <= hi))
-    # per-series kind flags from the engine series dim (no per-query
-    # scan; see _kind_flags) — the previous per-sig Window shuffled
-    # and sorted every full-width histogram row before a single useful
-    # op ran (measured: 2× the cost of the rate fold itself on the
-    # native-hist macro bench)
-    flagged = base.join(_kind_flags(ctx, base), "sig")
-    pure_h = flagged.filter(
-        (F.col("__has_h") == 1) & (F.col("__has_f") == 0)
-    ).drop("__has_h", "__has_f")
-    rest = flagged.filter(
-        (F.col("__has_h") == 0) | (F.col("__has_f") == 1)
-    ).drop("__has_h", "__has_f")
+    floats, hists, mixed = split_kinds(ctx, base, stored=True)
     dim = selector_dim(ctx, selector.matchers, base)
+    rest = floats if hists is None else floats.unionByName(mixed)
     w, _wdim = windowed_samples(ctx, rest, range_ms, offset_ms=offset_ms)
-    out = eval_range_function(ctx, func, w, range_ms, dim=_wdim).fact
-    h = hist_arith.window_rate_asof(
-        ctx, pure_h, range_ms, offset_ms,
-        is_counter=func != "delta", is_rate=func == "rate",
-    )
-    return VectorFrame(
-        fact=out.unionByName(h, allowMissingColumns=True), dim=dim
-    )
+    out = eval_range_function(ctx, func, w, range_ms, dim=_wdim, stored=True).fact
+    if hists is not None:
+        h = hist_arith.window_rate_asof(
+            ctx, hists, range_ms, offset_ms,
+            is_counter=func != "delta", is_rate=func == "rate",
+        )
+        out = out.unionByName(h, allowMissingColumns=True)
+    return VectorFrame(fact=out, dim=dim)

@@ -326,20 +326,18 @@ def _smoothed_instant(
     Series carrying histogram samples take the Python interpolation path
     (hist_arith.smoothed_instant_hist)."""
     lb = ctx.lookback_ms
-    base = base.filter(~F.col("stale"))
+    from prometheus_spark.engine.range_functions import split_kinds
+
+    base, hists, mixed = split_kinds(ctx, base.filter(~F.col("stale")), stored=True)
     hist_part = None
-    if "hist" in base.columns:
+    if hists is not None:
         # series carrying histogram samples take the Python interpolation
         # path (whole series — mixed windows are judged per step there)
-        ws = Window.partitionBy("sig")
-        flagged = base.withColumn(
-            "__has_h", F.max(F.col("hist").isNotNull().cast("int")).over(ws)
-        )
-        hist_series = flagged.filter(F.col("__has_h") == 1).drop("__has_h")
-        base = flagged.filter(F.col("__has_h") == 0).drop("__has_h")
         from prometheus_spark.engine import hist_arith
 
-        hist_part = hist_arith.smoothed_instant_hist(ctx, hist_series, offset, at)
+        hist_part = hist_arith.smoothed_instant_hist(
+            ctx, hists.unionByName(mixed), offset, at
+        )
     base = base.filter(F.col("value").isNotNull())
     w = Window.partitionBy("sig").orderBy("t")
     adj = base.withColumn("next_t", F.lead("t").over(w)).withColumn(

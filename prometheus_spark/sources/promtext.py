@@ -282,20 +282,12 @@ def parse_exposition_df(
     of pipeline cost), so lines matching a strict classifier regex are
     parsed entirely JVM-side inside whole-stage codegen; only lines the
     fast grammar can't express (escapes, quoted UTF-8 names, exotic
-    float spellings) go through the Arrow-batched Python parser.  Set
-    ``PROMSPARK_PROMTEXT_JVM=0`` to force the Python path everywhere
-    (parity sweeps / A-B timing).
+    float spellings) go through the Arrow-batched Python parser
+    (:func:`_parse_python`, also the parity reference for the fast
+    grammar).
     """
-    import os
-
-    from pyspark.sql import functions as F
-
     cols = [line_col] + ([ts_col] if ts_col else [])
-    src = lines.select(*cols)
-
-    if os.environ.get("PROMSPARK_PROMTEXT_JVM", "1") != "0":
-        return _parse_hybrid_onepass(src, line_col, ts_col)
-    return _parse_python(src, line_col, ts_col)
+    return _parse_hybrid_onepass(lines.select(*cols), line_col, ts_col)
 
 
 def _parse_hybrid_onepass(

@@ -157,9 +157,12 @@ class RulesEngine:
         # previous tick's ALERTS/ALERTS_FOR_STATE label sets per rule,
         # for stale-marker emission on vanish
         self._prev_alert_series: dict[str, dict] = {}
-        # previous eval's (sig, labels) frame per recording rule, cached —
-        # one row per output series, never collected
-        self._prev_series: dict[str, DataFrame] = {}
+        # the last two evals' persisted output frames per recording rule,
+        # newest first — one row per output series, never collected.  The
+        # newest feeds the next tick's vanished-series anti-join; the older
+        # one stays persisted while the frame returned a tick ago (its
+        # stale markers read it lazily) may still be consumed
+        self._prev_series: dict[str, list[DataFrame]] = {}
 
     def drop_group_state(self, group_name: str) -> None:
         """Release everything keyed under a group (Manager.Update stops
@@ -167,11 +170,11 @@ class RulesEngine:
         state, previous-alert series, and dependency batches."""
         prefix = f"{group_name}/"
         for key in [k for k in self._prev_series if k.startswith(prefix)]:
-            try:
-                self._prev_series[key].unpersist()
-            except Exception:  # noqa: BLE001 — already-stopped contexts
-                pass
-            del self._prev_series[key]
+            for frame in self._prev_series.pop(key):
+                try:
+                    frame.unpersist()
+                except Exception:  # noqa: BLE001 — already-stopped contexts
+                    pass
         for m in (self._alert_state, self._prev_alert_series):
             for key in [k for k in m if k.startswith(prefix)]:
                 del m[key]
@@ -357,11 +360,12 @@ class RulesEngine:
             # resolves when the rule recovers (group.go EvalFailures path)
             current.unpersist()
             return current.limit(0)
-        prev = self._prev_series.get(key)
+        gens = self._prev_series.setdefault(key, [])
         out = current
-        if prev is not None:
+        if gens:
             # staleness markers for series that vanished since last tick:
             # distributed anti-join, no driver materialization
+            prev = gens[0].select("sig", "name", "labels")
             vanished = prev.join(current.select("sig"), "sig", "left_anti")
             from prometheus_spark.model.schema import HISTOGRAM_TYPE
 
@@ -375,8 +379,12 @@ class RulesEngine:
                 F.lit(True).alias("stale"),
             )
             out = current.unionByName(stale)
-            prev.unpersist()
-        self._prev_series[key] = current.select("sig", "name", "labels")
+        # two generations: the frame returned last tick still reads the
+        # one before it lazily, so only the third-newest is released
+        gens.insert(0, current)
+        for frame in gens[2:]:
+            frame.unpersist()
+        del gens[2:]
         return out
 
     def _eval_alerting(

@@ -85,3 +85,36 @@ def test_annotations_resolve():
                 # expressions) is not this test's concern.
                 continue
     assert not failures, "\n".join(failures)
+
+
+# Every PROMSPARK_* environment variable the package reads, with why it
+# stays a runtime switch rather than a module constant.  A new knob needs
+# a deliberate entry here.
+_ENV_KNOBS = {
+    # tests and tools/corpus_sweep.py force each route across process
+    # boundaries (parity sweeps)
+    "PROMSPARK_PREFIX_RANGE_THRESHOLD": "prefix/as-of route cutoff, forced by parity tests",
+    "PROMSPARK_HIST_ASOF_THRESHOLD": "histogram as-of route cutoff, forced by parity tests",
+    # the other path is a parity test's reference
+    "PROMSPARK_EXT_IMPL": "anchored/smoothed fold vs explode, reference in test_extended_fold",
+    "PROMSPARK_HIST_GS_VECTOR": "histogram group_sum vector fold, reference in test_hist_group_sum",
+    "PROMSPARK_HIST_RATE_VECTOR": "histogram rate vector fold, reference in test_hist_rate_vector",
+    "PROMSPARK_MINHASH_IMPL": "minhash implementation, reference in test_pipeline",
+    "PROMSPARK_SIMHASH_IMPL": "simhash implementation, reference in test_pipeline",
+    # driver-side Python GC pacing for long-lived servers (pygc.py)
+    "PROMSPARK_GC_EVERY": "collect every N rule evaluations",
+    "PROMSPARK_GC_DEBUG": "log each paced collection",
+}
+
+
+def test_env_knobs_allow_listed():
+    import re
+    from pathlib import Path
+
+    root = Path(prometheus_spark.__file__).parent
+    found = set()
+    for path in root.rglob("*.py"):
+        found |= set(re.findall(r"PROMSPARK_[A-Z0-9_]+", path.read_text()))
+    assert found == set(_ENV_KNOBS), (
+        sorted(found - set(_ENV_KNOBS)), sorted(set(_ENV_KNOBS) - found)
+    )

@@ -88,6 +88,32 @@ def test_float_path_has_no_python(spark):
         assert marker not in plan, f"Python operator {marker} in float path"
 
 
+def test_float_frame_with_hist_column_skips_kind_routing(spark):
+    """A float-only frame that still carries the (all-NULL) ``hist``
+    column — every ``samples_from_rows``/remote-write spool frame — must
+    plan neither a float/histogram kind-flag Window nor a Python stage:
+    the engine's series-dim init job already knows no histogram exists."""
+    from prometheus_spark.engine import PromQLEngine
+
+    rows = [({"__name__": "x", "l": str(i % 2), "i": str(i)},
+             t * 10_000, float(t + i))
+            for t in range(60) for i in range(4)]
+    samples = samples_from_rows(spark, rows)
+    assert "hist" in samples.columns
+    eng = PromQLEngine(spark, samples)
+    for q in ("sum_over_time(x[30s])", "sum by (l) (rate(x[5m]))"):
+        # range/step 5 keeps rate on the (JVM) explode path
+        plan = _plan(eng.range_query(q, 300_000, 590_000, 60_000))
+        # kind flags are max() windows (rate's reset window is a lag())
+        kind_windows = [
+            ln for ln in plan.splitlines() if "Window [" in ln and "max(" in ln
+        ]
+        assert not kind_windows, (q, kind_windows)
+        for marker in ("ArrowEvalPython", "FlatMapGroupsInPandas",
+                       "MapInPandas", "BatchEvalPython", "PythonUDF"):
+            assert marker not in plan, (q, marker)
+
+
 def test_binop_join_not_cartesian(spark):
     """Vector-matching binary ops are signature equi-joins — the plan
     must use a hash or sort-merge join, never cartesian/BNL."""

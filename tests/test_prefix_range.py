@@ -92,8 +92,7 @@ def test_default_gate_uses_fast_path_on_wide_ratio(spark, samples):
     df = eng.range_query("rate(c[1000s])", 100_000, 1_150_000, 10_000)
     plan = df._jdf.queryExecution().executedPlan().toString()
     # fast-path signature: the Arrow stats fold (series_stats grouped-map)
-    # or, under PROMSPARK_PREFIX_IMPL=sql, the prefix-sum window carry
-    fast_marker = ("series_stats" in plan) or ("cum_drop" in plan)
+    fast_marker = "series_stats" in plan
     assert "Generate explode" not in plan or fast_marker
     assert fast_marker
 

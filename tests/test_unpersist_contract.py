@@ -73,3 +73,39 @@ def test_ann_index_unpersist(spark):
     assert new
     idx.unpersist()
     assert not (new & _persistent_ids(spark))
+
+
+def test_recording_rules_release_old_outputs(spark):
+    """Each recording rule persists its tick output for the next tick's
+    vanished-series anti-join; the frame returned a tick earlier reads
+    the generation before it lazily, so at most two generations per rule
+    stay persisted — whatever the tick count."""
+    from prometheus_spark.storage import samples_from_rows
+    from prometheus_spark.streaming import RecordingRule, RuleGroup, RulesEngine
+
+    step = 10_000
+    rows = [
+        ({"__name__": "m", "i": str(i)}, t * step, float(t + i))
+        for t in range(40)
+        for i in range(3)
+        if not (i == 2 and t > 8)  # i="2" vanishes: stale markers
+    ]
+    samples = samples_from_rows(spark, rows)
+    rules = [RecordingRule("m:sum", "sum(m)"), RecordingRule("m:double", "m * 2")]
+    group = RuleGroup("g", step, rules)
+    base = _persistent_ids(spark)
+    eng = RulesEngine(spark, samples, lookback_ms=3 * step)
+    outs, counts, sizes = [], [], []
+    for tick in range(6):
+        out, _ = eng.eval_tick(group, (8 + tick) * step)
+        outs.append(out)
+        counts.append(out.count())
+        sizes.append(len(_persistent_ids(spark) - base))
+    # 2 generations × 2 recording rules, plus the engine's series dim
+    assert max(sizes) <= 2 * 2 + 1, sizes
+    assert sizes[-1] == sizes[3], sizes
+    assert any(c > counts[-1] for c in counts), counts  # markers emitted
+    # a returned frame stays consumable after its input is released
+    assert outs[0].count() == counts[0]
+    eng.drop_group_state("g")
+    assert len(_persistent_ids(spark) - base) <= 1
