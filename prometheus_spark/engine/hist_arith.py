@@ -1004,9 +1004,10 @@ def smoothed_instant_hist(
     (engine.go ``smoothSeries`` histogram branch): exact sample → copy;
     surrounded → interpolateHistograms (counter unless both gauge); only a
     preceding sample → carry forward with hint reset to unknown; a step
-    window mixing floats and histograms is skipped.  Name kept.  Fold is
-    sig-native; labels join back (the smoothed selector's frame is the
-    legacy inline-labels contract)."""
+    window mixing floats and histograms is skipped, and a float-only
+    window (of a mixed series) takes the float path's math.  Name kept.
+    Fold is sig-native; labels join back (the smoothed selector's frame
+    is the legacy inline-labels contract)."""
     from prometheus_spark.shipping import ensure_shipped
 
     ensure_shipped(ctx.spark)
@@ -1042,7 +1043,19 @@ def smoothed_instant_hist(
             if w_h and w_f:
                 continue  # mixed window: warn & skip
             if not w_h:
-                continue  # pure-float series handled JVM-side
+                # float-only window of a mixed series: the float math of
+                # selectors._smoothed_instant (exact sample, else
+                # interpolate to a next sample within the lookback, else
+                # carry forward; nothing with only a following sample)
+                j = bisect_left([t for t, _ in w_f], data_ts + 1)
+                if j == 0:
+                    continue
+                pt, pv = w_f[j - 1]
+                if pt != data_ts and j < len(w_f):
+                    nt, nv = w_f[j]
+                    pv = pv + (nv - pv) * (data_ts - pt) / (nt - pt)
+                _append_row(rows, sig, step_t, float(pv), None)
+                continue
             i = bisect_left([t for t, _ in w_h], data_ts)
             out_h = None
             if i < len(w_h) and w_h[i][0] == data_ts:
