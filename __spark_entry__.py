@@ -508,7 +508,7 @@ def _promql_range_rate(spark, sf_dir):
 
 def _promql_range_wide(spark, sf_dir, fn, round_to):
     """Wide range/step ratio (7d window, 1h step → ratio 168): exercises
-    the prefix/as-of fast path (range_functions.eval_range_function_prefix)
+    the prefix fold (range_functions._prefix_fold)
     under the driver's correctness gate."""
     return _engine(spark, sf_dir).range_query(
         f"{fn}(purchase[{RANGE_7D}])", T0_MS - 2 * 86_400_000, T0_MS, 3_600_000
@@ -522,7 +522,7 @@ def _promql_range_wide(spark, sf_dir, fn, round_to):
 def _promql_des_wide(spark, sf_dir):
     """double_exponential_smoothing at wide range/step ratio (168 ≥ the
     gate threshold): exercises the as-of Arrow fast path
-    (range_functions.eval_des_asof) under the driver's correctness gate;
+    (range_functions._des_fold) under the driver's correctness gate;
     the DuckDB oracle replays the recurrence as a recursive CTE with the
     identical IEEE op order."""
     return _engine(spark, sf_dir).range_query(

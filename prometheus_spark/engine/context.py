@@ -212,6 +212,18 @@ class EvalContext:
             at_end_ms=self.at_end_ms if self.at_end_ms is not None else self.end_ms,
         )
 
+    def duration_vars(self) -> dict:
+        """Query-context values (seconds) that duration expressions such
+        as ``[step() * 2]`` resolve against."""
+        start = self.at_start_ms if self.at_start_ms is not None else self.start_ms
+        end = self.at_end_ms if self.at_end_ms is not None else self.end_ms
+        return {
+            "step": 0.0 if self.is_instant else self.step_ms / 1000.0,
+            "range": (end - start) / 1000.0,
+            "start": start / 1000.0,
+            "end": end / 1000.0,
+        }
+
     def resolve_at(self, at) -> int:
         """Resolve @ modifier sentinels (reference: ast.go:216-218).
 

@@ -316,7 +316,7 @@ class PromQLEngine:
 
             t0 = _time.monotonic()
             ctx = self._ctx(time_ms, time_ms, 1)
-            w, dim, _rng, _mode = Evaluator(ctx)._matrix_arg(inner)
+            w, dim, _rng = Evaluator(ctx)._matrix_arg(inner)
             hist_cols = ["hist"] if "hist" in w.columns else []
             fact = w.select(
                 "sig", F.col("sample_t").alias("t"),

@@ -11,9 +11,7 @@ across the step grid.
 from __future__ import annotations
 
 import math
-from typing import Optional
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from prometheus_spark.engine import binop as B
@@ -30,21 +28,17 @@ from prometheus_spark.engine.values import (
     scalar_frame_from_const,
 )
 from prometheus_spark.parser.ast import (
-    AT_END,
-    AT_START,
     resolve_duration_ms,
     AggregateExpr,
     BinaryExpr,
     Call,
     Expr,
-    MatchType,
     MatrixSelector,
     NumberLiteral,
     ParenExpr,
     StringLiteral,
     SubqueryExpr,
     UnaryExpr,
-    ValueType,
     VectorSelector,
 )
 
@@ -182,46 +176,34 @@ class Evaluator:
     # ------------------------------------------------------------------
     def _matrix_arg(self, node: Expr):
         """Evaluate a range-vector argument → (windowed frame, labels
-        dim, range_ms, extended-mode: None | 'anchored' | 'smoothed').
-        Split frame contract: the windowed frame carries no labels."""
+        dim, range_ms); anchored/smoothed selectors give their extended
+        windows.  Split frame contract: the windowed frame carries no
+        labels."""
         ctx = self.ctx
         while isinstance(node, ParenExpr):
             node = node.expr
         if isinstance(node, MatrixSelector):
             sel = node.selector
-            rng = resolve_duration_ms(node.range_ms, self._qctx())
-            off = resolve_duration_ms(sel.offset_ms, self._qctx())
+            rng = resolve_duration_ms(node.range_ms, ctx.duration_vars())
+            off = resolve_duration_ms(sel.offset_ms, ctx.duration_vars())
             if node.anchored or node.smoothed:
                 from prometheus_spark.engine.selectors import extended_windowed_samples
 
                 w, dim = extended_windowed_samples(
                     ctx, sel, rng, off, sel.at, smoothed=node.smoothed
                 )
-                return w, dim, rng, "smoothed" if node.smoothed else "anchored"
+                return w, dim, rng
             w, dim = windowed_samples(ctx, sel, rng, off, sel.at)
-            return w, dim, rng, None
+            return w, dim, rng
         if isinstance(node, SubqueryExpr):
-            w, dim, rng = self._subquery(node)
-            return w, dim, rng, None
+            return self._subquery(node)
         raise PromQLEvalError("expected range vector argument")
-
-    def _qctx(self) -> dict:
-        """Query-context values for duration expressions (seconds)."""
-        ctx = self.ctx
-        start = ctx.at_start_ms if ctx.at_start_ms is not None else ctx.start_ms
-        end = ctx.at_end_ms if ctx.at_end_ms is not None else ctx.end_ms
-        return {
-            "step": 0.0 if ctx.is_instant else ctx.step_ms / 1000.0,
-            "range": (end - start) / 1000.0,
-            "start": start / 1000.0,
-            "end": end / 1000.0,
-        }
 
     def _subquery(self, node: SubqueryExpr) -> tuple:
         """Subquery (engine.go:1932): evaluate inner expr over an
         epoch-aligned denser grid, then window the result."""
         ctx = self.ctx
-        qc = self._qctx()
+        qc = ctx.duration_vars()
         # default resolution = 1m (the reference's default eval interval /
         # noStepSubqueryIntervalFn), NOT the parent step
         step = resolve_duration_ms(node.step_ms, qc) if node.step_ms else 60_000
@@ -306,161 +288,25 @@ class Evaluator:
                 )
             raise PromQLEvalError(f"{fn}: per-step scalars not supported yet")
 
-        if fn in RF.RANGE_FUNCTIONS:
-            def _att(vf, sel):
-                # range functions preserve the series set — carry the
-                # selector's cardinality estimate (sig_inline_ok input)
-                if isinstance(vf, VectorFrame) and sel is not None:
-                    from prometheus_spark.engine.selectors import selector_est
-
-                    est = selector_est(ctx, sel)
-                    if est is not None and vf.est_series is None:
-                        vf.est_series, vf.est_sig_bytes = est
-                return vf
-
-            param = self.eval(node.args[0]) if fn == "quantile_over_time" else None
-            if fn == "predict_linear":
-                param = self._scalar(node.args[1])
-            if fn == "double_exponential_smoothing":
-                m_node = node.args[0]
-                while isinstance(m_node, ParenExpr):
-                    m_node = m_node.expr
-                # as-of fast path: the DES recurrence itself is
-                # irreducible, but the range/step window explode is not
-                # (range_functions.eval_des_asof)
-                if (
-                    isinstance(m_node, MatrixSelector)
-                    and not m_node.anchored and not m_node.smoothed
-                    and not m_node.selector.anchored
-                    and not m_node.selector.smoothed
-                    and m_node.selector.at is None
-                ):
-                    qc = self._qctx()
-                    rng = resolve_duration_ms(m_node.range_ms, qc)
-                    off = resolve_duration_ms(m_node.selector.offset_ms, qc)
-                    thr = RF.prefix_threshold()
-                    # instant queries route here too: their step grid is
-                    # 1 ms wide, so range//step always clears the
-                    # threshold — and the explode path's JVM array fold
-                    # (collect_list + F.aggregate) measures ~4 s on a
-                    # [1d] window where the as-of scalar loop is ~ms
-                    if thr == 0 or rng // ctx.step_ms >= thr:
-                        return _att(RF.eval_des_asof(
-                            ctx, m_node.selector, rng, off,
-                            self._scalar(node.args[1]),
-                            self._scalar(node.args[2]),
-                        ), m_node.selector)
-                w, dim, rng, mode = self._matrix_arg(node.args[0])
-                if mode is not None:
-                    raise PromQLEvalError(f"{mode} modifier cannot be used with {fn}")
-                return _att(RF.eval_range_function(
-                    ctx, fn, w, rng, self._scalar(node.args[1]), self._scalar(node.args[2]),
-                    dim=dim, stored=isinstance(m_node, MatrixSelector),
-                ), m_node.selector if isinstance(m_node, MatrixSelector) else None)
-            m_idx = 1 if fn == "quantile_over_time" else 0
-            m_node = node.args[m_idx]
+        if fn in RF.RANGE_FUNCTIONS or fn == "absent_over_time":
+            m_node = node.args[1 if fn == "quantile_over_time" else 0]
             while isinstance(m_node, ParenExpr):
                 m_node = m_node.expr
-            # prefix/as-of fast path: plain selector, wide range/step
-            # ratio → O(samples + series×steps) instead of the
-            # range/step-factor window explode (range_functions.py
-            # eval_range_function_prefix)
-            if (
-                fn in RF.PREFIX_RANGE_FUNCS
-                and isinstance(m_node, MatrixSelector)
-                and not m_node.anchored and not m_node.smoothed
-                and not m_node.selector.anchored
-                and not m_node.selector.smoothed
-                and m_node.selector.at is None
-            ):
-                qc = self._qctx()
-                rng = resolve_duration_ms(m_node.range_ms, qc)
-                off = resolve_duration_ms(m_node.selector.offset_ms, qc)
-                thr = RF.prefix_threshold()
-                # instant queries have explode factor 1 — fast path is
-                # pure overhead there (thr == 0 forces it anyway, for
-                # the corpus parity sweep)
-                if thr == 0 or (
-                    not ctx.is_instant and rng // ctx.step_ms >= thr
-                ):
-                    return _att(RF.eval_range_function_prefix(
-                        ctx, fn, m_node.selector, rng, off
-                    ), m_node.selector)
-                # explode-favoring ratio, but histogram windows are
-                # Python-cost dominated: pure-hist series still win on
-                # the as-of path (range_functions.eval_rate_hybrid)
-                if (
-                    fn in ("rate", "increase", "delta")
-                    and not ctx.is_instant
-                    and RF.hist_possible(ctx, ctx.samples)
-                    and rng // ctx.step_ms >= RF.hist_asof_threshold()
-                ):
-                    return _att(RF.eval_rate_hybrid(
-                        ctx, fn, m_node.selector, rng, off
-                    ), m_node.selector)
-            # anchored/smoothed rate family on a plain selector: per-series
-            # Arrow fold instead of the three-branch explode+union plan
-            # (range_functions.eval_extended_rate_fold); @-pinned windows
-            # keep the materialized path (single broadcast grid, cheap)
-            if (
-                fn in ("rate", "increase", "delta")
-                and isinstance(m_node, MatrixSelector)
-                and (m_node.anchored or m_node.smoothed)
-                and m_node.selector.at is None
-            ):
-                import os as _os
-
-                if _os.environ.get("PROMSPARK_EXT_IMPL", "fold") == "fold":
-                    qc = self._qctx()
-                    return _att(RF.eval_extended_rate_fold(
-                        ctx,
-                        fn,
-                        m_node.selector,
-                        resolve_duration_ms(m_node.range_ms, qc),
-                        resolve_duration_ms(m_node.selector.offset_ms, qc),
-                        smoothed=m_node.smoothed,
-                    ), m_node.selector)
-            w, dim, rng, mode = self._matrix_arg(node.args[m_idx])
-            return _att(
-                RF.eval_range_function(
-                    ctx, fn, w, rng, param, mode=mode, dim=dim,
-                    stored=isinstance(m_node, MatrixSelector),
-                ),
-                m_node.selector if isinstance(m_node, MatrixSelector) else None,
-            )
-
-        if fn == "absent_over_time":
-            m_node = node.args[0]
-            while isinstance(m_node, ParenExpr):
-                m_node = m_node.expr
-            # absent_over_time(x[r]) ≡ absent(present_over_time(x[r]));
-            # at wide range/step ratio, route presence through the
-            # prefix fast path instead of the window explode
-            if (
-                isinstance(m_node, MatrixSelector)
-                and not m_node.anchored and not m_node.smoothed
-                and not m_node.selector.anchored
-                and not m_node.selector.smoothed
-                and m_node.selector.at is None
-            ):
-                qc = self._qctx()
-                rng = resolve_duration_ms(m_node.range_ms, qc)
-                off = resolve_duration_ms(m_node.selector.offset_ms, qc)
-                thr = RF.prefix_threshold()
-                if thr == 0 or (
-                    not ctx.is_instant and rng // ctx.step_ms >= thr
-                ):
-                    pv = RF.eval_range_function_prefix(
-                        ctx, "present_over_time", m_node.selector, rng, off
-                    )
-                    return FN.eval_absent(
-                        ctx, pv, _inferred_labels(node.args[0])
-                    )
-            w, _dim, _, mode = self._matrix_arg(node.args[0])
-            if mode is not None:
-                raise PromQLEvalError(f"{mode} modifier cannot be used with absent_over_time")
-            inferred = _inferred_labels(node.args[0])
-            return FN.eval_absent_over_time(ctx, w, inferred)
+            if fn == "quantile_over_time":
+                params = (self.eval(node.args[0]), None)
+            elif fn == "predict_linear":
+                params = (self._scalar(node.args[1]), None)
+            elif fn == "double_exponential_smoothing":
+                params = (self._scalar(node.args[1]), self._scalar(node.args[2]))
+            else:
+                params = (None, None)
+            if isinstance(m_node, MatrixSelector):
+                return RF.eval_matrix_range(ctx, fn, m_node, params)
+            w, dim, rng = self._matrix_arg(m_node)
+            if fn == "absent_over_time":
+                # a subquery infers no labels
+                return FN.eval_absent_over_time(ctx, w, {})
+            return RF.eval_range_function(ctx, fn, w, rng, *params, dim=dim)
 
         if fn in FN._SIMPLE_MATH:
             return self._guarded(FN.eval_simple_math(fn, self._vector_or_default(node.args, 0)))
@@ -491,7 +337,7 @@ class Evaluator:
             return FN.eval_vector(ctx, self._scalar(node.args[0]))
         if fn == "absent":
             vf = self._vector(node.args[0])
-            return FN.eval_absent(ctx, vf, _inferred_labels(node.args[0]))
+            return FN.eval_absent(ctx, vf, FN.absent_labels(node.args[0]))
         if fn == "label_replace":
             args = [self._string(a) for a in node.args[1:]]
             return self._guarded(FN.eval_label_replace(self._vector(node.args[0]), *args, ctx=ctx))
@@ -619,31 +465,3 @@ class Evaluator:
             return v.value
         raise PromQLEvalError("expected a string literal")
 
-
-def _inferred_labels(node: Expr) -> dict[str, str]:
-    """absent()/absent_over_time() label inference: equality matchers of the
-    argument selector (promql/functions.go createLabelsForAbsentFunction).
-    Subqueries infer nothing — the inner expression is arbitrary."""
-    while isinstance(node, ParenExpr):
-        node = node.expr
-    if isinstance(node, MatrixSelector):
-        node = node.selector
-        while isinstance(node, ParenExpr):
-            node = node.expr
-    if not isinstance(node, VectorSelector):
-        return {}
-    out: dict[str, str] = {}
-    dropped: set[str] = set()
-    for m in node.matchers:
-        if m.name == "__name__":
-            continue
-        if m.type == MatchType.EQ and m.name not in dropped:
-            if m.name in out and out[m.name] != m.value:
-                dropped.add(m.name)
-                out.pop(m.name, None)
-            else:
-                out[m.name] = m.value
-        else:
-            dropped.add(m.name)
-            out.pop(m.name, None)
-    return out

@@ -22,6 +22,12 @@ from prometheus_spark.engine.values import (
     VectorFrame,
 )
 from prometheus_spark.model.labels import drop_name_expr, sig_expr
+from prometheus_spark.parser.ast import (
+    MatchType,
+    MatrixSelector,
+    ParenExpr,
+    VectorSelector,
+)
 
 def _NAN():  # lazily built: F.lit needs an active SparkContext
     return F.lit(float("nan"))
@@ -280,6 +286,35 @@ def eval_absent_over_time(
     ctx: EvalContext, windowed: DataFrame, inferred: dict[str, str]
 ) -> VectorFrame:
     return eval_absent(ctx, VectorFrame(windowed), inferred)
+
+
+def absent_labels(node) -> dict[str, str]:
+    """absent()/absent_over_time() label inference: equality matchers of the
+    argument selector (promql/functions.go createLabelsForAbsentFunction).
+    Subqueries infer nothing — the inner expression is arbitrary."""
+    while isinstance(node, ParenExpr):
+        node = node.expr
+    if isinstance(node, MatrixSelector):
+        node = node.selector
+        while isinstance(node, ParenExpr):
+            node = node.expr
+    if not isinstance(node, VectorSelector):
+        return {}
+    out: dict[str, str] = {}
+    dropped: set[str] = set()
+    for m in node.matchers:
+        if m.name == "__name__":
+            continue
+        if m.type == MatchType.EQ and m.name not in dropped:
+            if m.name in out and out[m.name] != m.value:
+                dropped.add(m.name)
+                out.pop(m.name, None)
+            else:
+                out[m.name] = m.value
+        else:
+            dropped.add(m.name)
+            out.pop(m.name, None)
+    return out
 
 
 _LABEL_NAME_RE = re.compile(r"^[a-zA-Z_][a-zA-Z0-9_]*$")

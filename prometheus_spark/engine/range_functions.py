@@ -55,8 +55,9 @@ RANGE_FUNCTIONS = frozenset(
 _KEEPS_NAME = frozenset({"last_over_time", "first_over_time"})
 
 
-_ANCHORED_SAFE = frozenset({"resets", "changes", "rate", "increase", "delta"})
-_SMOOTHED_SAFE = frozenset({"rate", "increase", "delta"})
+_RATE_FUNCS = frozenset({"rate", "increase", "delta"})
+_ANCHORED_SAFE = _RATE_FUNCS | {"resets", "changes"}
+_SMOOTHED_SAFE = _RATE_FUNCS
 # functions whose windows route by float/histogram kind (split_kinds)
 _KIND_SPLIT_FUNCS = frozenset(
     {
@@ -67,9 +68,9 @@ _KIND_SPLIT_FUNCS = frozenset(
 
 
 # ---------------------------------------------------------------------
-# prefix/as-of fast path (O(samples + series×steps), no range/step
-# explode) — functions whose window statistics decompose into prefix
-# sums + the window's first/last sample.  sum/avg_over_time stay on the
+# prefix fold (O(samples + series×steps), no range/step explode) —
+# functions whose window statistics decompose into prefix sums + the
+# window's first/last sample.  sum/avg_over_time stay on the
 # explode path: a cumulative-difference sum can cancel catastrophically
 # where a direct window sum cannot.
 PREFIX_RANGE_FUNCS = frozenset(
@@ -83,7 +84,7 @@ PREFIX_RANGE_FUNCS = frozenset(
 
 
 def prefix_threshold() -> int:
-    """Minimum range/step ratio for the fast path.  Below it, the
+    """Minimum range/step ratio for the prefix and DES folds.  Below it, the
     explode path's duplication factor is small and its single shuffle
     wins; above it, the explode factor dominates (a [1d] window on a 10s
     step duplicates every sample 8640×).  Measured crossover on the
@@ -97,6 +98,20 @@ def prefix_threshold() -> int:
     import os
 
     return int(os.environ.get("PROMSPARK_PREFIX_RANGE_THRESHOLD", "24"))
+
+
+def hist_asof_threshold() -> int:
+    """Minimum range/step ratio for routing PURE-histogram series of a
+    rate-family call through :func:`hist_arith.window_rate_asof` when
+    the ratio is below :func:`prefix_threshold` (floats keep the explode
+    there).  Histogram windows are Python-cost dominated — the explode
+    multiplies ``from_row`` deserializations and shuffle bytes by the
+    ratio, so as-of wins for histograms at ratios where the float
+    explode still wins.  Override for testing with
+    PROMSPARK_HIST_ASOF_THRESHOLD."""
+    import os
+
+    return int(os.environ.get("PROMSPARK_HIST_ASOF_THRESHOLD", "4"))
 
 
 def eval_range_function(
@@ -128,7 +143,7 @@ def eval_range_function(
                 f"{', '.join(sorted(safe))} - not with {func}"
             )
         floats, hists, mixed = split_kinds(ctx, windowed, stored, per_window=True)
-        if func in ("rate", "increase", "delta"):
+        if func in _RATE_FUNCS:
             out = _extended_delta(
                 ctx, floats, range_ms,
                 is_counter=func != "delta", is_rate=func == "rate",
@@ -167,7 +182,7 @@ def eval_range_function(
     if func in _KIND_SPLIT_FUNCS:
         floats, hists, mixed = split_kinds(ctx, windowed, stored, per_window=True)
         floats = floats.filter(F.col("value").isNotNull())
-    if func in ("rate", "increase", "delta"):
+    if func in _RATE_FUNCS:
         out = _extrapolated(ctx, floats, range_ms, is_counter=func != "delta", is_rate=func == "rate")
         if hists is not None:
             from prometheus_spark.engine import hist_arith
@@ -598,194 +613,6 @@ def _extended_delta(
     return _finish(out, ctx)
 
 
-def eval_extended_rate_fold(
-    ctx: EvalContext,
-    func: str,
-    selector,
-    range_ms: int,
-    offset_ms: int = 0,
-    smoothed: bool = False,
-) -> VectorFrame:
-    """anchored/smoothed rate/increase/delta as a per-series Arrow fold.
-
-    The materialized plan (selectors.extended_windowed_samples +
-    _extended_delta) explodes the samples THREE ways (interior + left +
-    right boundary candidates), unions them, runs two validity windows
-    and a lag window over the union, and aggregates — five shuffles of
-    samples×ratio rows.  Per series the same math is a pair of
-    ``np.searchsorted`` calls, one prefix cumsum of counter drops, and
-    vectorized boundary interpolation — the same shape as
-    ``_prefix_stats_arrow``.  Sample adjacency (the interpolation
-    neighbours) comes from array shifts inside the fold: although the
-    materialized path computes lead/lag over the UNSCOPED series, an
-    out-of-scope neighbour can only ever be consulted by an INVALID
-    window — a left boundary's next sample on a valid window is the
-    window's first interior sample or its right boundary (both in
-    scope), a right boundary's previous is the last interior or the
-    left boundary, and a right boundary whose previous sample precedes
-    the scope has no in-lookback left boundary, failing validity — so
-    in-scope shifts are exact for every emitted row.
-
-    Histogram-carrying series route to the materialized path unchanged
-    (mixed-window semantics live there); the two halves union.
-    ``PROMSPARK_EXT_IMPL=explode`` forces the old plan everywhere."""
-    import numpy as np
-    import pandas as pd
-
-    from prometheus_spark.engine.selectors import (
-        extended_windowed_samples,
-        matcher_predicate,
-        selector_dim,
-    )
-
-    base = ctx.samples.filter(
-        matcher_predicate(selector.matchers, ctx.samples.columns)
-    ).filter(~F.col("stale"))
-    lb = int(ctx.lookback_ms)
-    lo = ctx.start_ms - offset_ms - range_ms - lb
-    hi = ctx.end_ms - offset_ms + (lb if smoothed else 0)
-    scoped_pred = f"t > {lo} AND t <= {hi}"
-    dim = selector_dim(ctx, selector.matchers, base.filter(scoped_pred))
-
-    hist_out = None
-    base_f, hists, mixed = split_kinds(ctx, base, stored=True)
-    if hists is not None:
-        hw, hdim = extended_windowed_samples(
-            ctx, selector, range_ms, offset_ms=offset_ms,
-            smoothed=smoothed, base=hists.unionByName(mixed),
-        )
-        hist_out = eval_range_function(
-            ctx, func, hw, range_ms,
-            mode="smoothed" if smoothed else "anchored", dim=hdim, stored=True,
-        ).fact
-
-    adj = base_f.filter(scoped_pred).selectExpr(
-        "sig", "t", "CAST(value AS DOUBLE) AS value"
-    )
-
-    step_arr = np.arange(
-        ctx.start_ms, ctx.end_ms + 1, ctx.step_ms, dtype=np.int64
-    )
-    wend_arr = step_arr - offset_ms
-    rs_arr = wend_arr - int(range_ms)
-    rng_s = range_ms / 1000.0
-    is_counter = func != "delta"
-    is_rate = func == "rate"
-    sm = bool(smoothed)
-    nsteps = len(step_arr)
-
-    empty = pd.DataFrame(
-        {
-            "sig": pd.Series([], dtype=str),
-            "t": pd.Series([], dtype=np.int64),
-            "value": pd.Series([], dtype=np.float64),
-        }
-    )
-
-    def _ctr_drop(a, b, active):
-        # counter reset across the pair: NOT isnan(a/b) AND b < a → add a
-        return np.where(
-            active & ~np.isnan(a) & ~np.isnan(b) & (b < a), a, 0.0
-        )
-
-    def series_fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        order = np.argsort(pdf["t"].to_numpy(np.int64), kind="mergesort")
-        ts = pdf["t"].to_numpy(np.int64)[order]
-        vs = pdf["value"].to_numpy(np.float64)[order]
-        n = len(ts)
-        if n == 0:  # pragma: no cover — groupBy never yields empty groups
-            return empty
-        right = np.searchsorted(ts, wend_arr, side="right")
-        left = np.searchsorted(ts, rs_arr, side="right")
-        has_int = right > left
-        # L = latest sample at/before rangeStart, within lookback
-        li = np.clip(left - 1, 0, n - 1)
-        ts_l, v_l = ts[li], vs[li]
-        has_L = (left >= 1) & (ts_l > rs_arr - lb)
-        L_eff = v_l
-        if sm:
-            # smoothed: interpolate strictly-pre-window L to the edge,
-            # counter-aware (functions.go:93 interpolate); the neighbour
-            # is the next in-scope sample — exact for valid windows (see
-            # docstring)
-            ni = np.clip(left, 0, n - 1)
-            nt_l, nv_l = ts[ni], vs[ni]
-            do_l = has_L & (ts_l < rs_arr) & (left < n)
-            reset_l = (nv_l < v_l) if is_counter else np.zeros(nsteps, bool)
-            y1 = np.where(reset_l, 0.0, v_l)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                interp_l = y1 + (nv_l - y1) * (rs_arr - ts_l) / (nt_l - ts_l)
-            L_eff = np.where(do_l, interp_l, v_l)
-        # R (smoothed) = earliest post-window sample, within lookback,
-        # with its previous sample strictly before the edge
-        has_R = np.zeros(nsteps, dtype=bool)
-        R_eff = np.full(nsteps, np.nan)
-        if sm:
-            ri = np.clip(right, 0, n - 1)
-            ts_r, v_r = ts[ri], vs[ri]
-            pi = np.clip(right - 1, 0, n - 1)
-            pt_r, pv_r = ts[pi], vs[pi]
-            has_prev = right >= 1
-            has_R = (
-                (right < n)
-                & (ts_r < wend_arr + lb)
-                & (~has_prev | (pt_r < wend_arr))
-            )
-            reset_r = (v_r < pv_r) if is_counter else np.zeros(nsteps, bool)
-            y1r = np.where(reset_r, 0.0, pv_r)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                interp_r = y1r + (v_r - y1r) * (wend_arr - pt_r) / (ts_r - pt_r)
-            R_eff = np.where(has_prev, interp_r, v_r)
-        # validity: a sample after rangeStart (interior or R) and one
-        # at/before rangeEnd (interior or L) — extended_windowed_samples'
-        # __after/__before flags
-        valid = (has_int | has_R) & (has_int | has_L)
-        if not valid.any():
-            return empty
-        fi = np.clip(left, 0, n - 1)
-        la = np.clip(right - 1, 0, n - 1)
-        int_first, int_last = vs[fi], vs[la]
-        first_eff = np.where(has_L, L_eff, np.where(has_int, int_first, R_eff))
-        last_eff = np.where(has_R, R_eff, np.where(has_int, int_last, L_eff))
-        corr = np.zeros(nsteps)
-        if is_counter:
-            if n >= 2:
-                a, b = vs[:-1], vs[1:]
-                dr = np.where(~np.isnan(a) & ~np.isnan(b) & (b < a), a, 0.0)
-                cum = np.concatenate(([0.0], np.cumsum(dr)))
-            else:
-                cum = np.zeros(max(n, 1))
-            corr = np.where(has_int, cum[la] - cum[fi], 0.0)
-            corr = corr + _ctr_drop(L_eff, int_first, has_L & has_int)
-            corr = corr + _ctr_drop(int_last, R_eff, has_R & has_int)
-            corr = corr + _ctr_drop(L_eff, R_eff, has_L & has_R & ~has_int)
-        val = last_eff - first_eff + corr
-        if is_rate:
-            val = val / rng_s
-        return pd.DataFrame(
-            {
-                "sig": pdf["sig"].iloc[0],
-                "t": step_arr[valid],
-                "value": val[valid],
-            }
-        )
-
-    folded = (
-        _pyfold_repartition(ctx, adj)
-        .groupBy("sig")
-        .applyInPandas(series_fold, schema="sig string, t long, value double")
-    )
-    # pandas→Arrow reads float NaN as null; the fold never emits null —
-    # any null IS a NaN result
-    out = _finish(
-        folded.select("sig", "t", F.coalesce("value", _NAN()).alias("value")),
-        ctx,
-    )
-    if hist_out is not None:
-        out = _union_hist(out, hist_out)
-    return VectorFrame(fact=out, dim=dim)
-
-
 def _instant_pair(ctx: EvalContext, windowed: DataFrame, is_rate: bool) -> DataFrame:
     """idelta/irate — last two samples (functions.go:821-826); irate also
     honors start-timestamp resets between them (functions.go:674)."""
@@ -911,6 +738,219 @@ def _holt_winters(ctx: EvalContext, windowed: DataFrame, sf, tf) -> DataFrame:
     return _finish(out, ctx)
 
 
+# ---------------------------------------------------------------------
+# the route choice for a range function over a matrix selector
+
+
+def eval_matrix_range(
+    ctx: EvalContext, fn: str, node, params: tuple = (None, None)
+) -> VectorFrame:
+    """``fn`` over the MatrixSelector ``node`` — the one place that picks
+    an evaluation route for it.  ``params``: the function's extra
+    arguments (quantile φ, predict_linear's duration, the smoothing and
+    trend factors of double_exponential_smoothing).
+
+    The selector is scoped once (matchers, stale markers, the time
+    bounds of its window shape, its labels dim) and split by series kind
+    (:func:`split_kinds`).  Each kind part takes one route, with ratio =
+    range // step, thr = :func:`prefix_threshold`, hthr =
+    :func:`hist_asof_threshold`, and "plain" = no anchored, smoothed or
+    @ modifier:
+
+    ======  ===========  ==============================================
+    part    route        when
+    ======  ===========  ==============================================
+    floats  DES fold     DES, plain, thr = 0 or ratio ≥ thr (instant
+                         queries too: their 1 ms step clears any thr)
+            prefix fold  PREFIX_RANGE_FUNCS, plain, thr = 0 or a range
+                         query with ratio ≥ thr
+            ext. fold    rate/increase/delta, anchored or smoothed, no @
+            explode      otherwise (:func:`eval_range_function`)
+    hists   as-of        rate/increase/delta, plain, the prefix fold
+                         taken or a range query with ratio ≥ hthr
+                         (``hist_arith.window_rate_asof``)
+            explode      otherwise
+    mixed   explode      always
+    ======  ===========  ==============================================
+
+    The DES fold ignores kinds: it reads every float sample (``value IS
+    NOT NULL``), as the explode's DES does.  The explode takes the parts
+    routed to it in one frame and splits their windows by kind itself.
+    ``absent_over_time`` is ``absent`` of the routed
+    ``present_over_time``."""
+    from prometheus_spark.engine.selectors import (
+        extended_windowed_samples,
+        matcher_predicate,
+        scoped_windows,
+        selector_dim,
+        selector_est,
+    )
+    from prometheus_spark.parser.ast import resolve_duration_ms
+
+    sel = node.selector
+    mode = "smoothed" if node.smoothed else "anchored" if node.anchored else None
+    if mode is not None and fn in ("absent_over_time", "double_exponential_smoothing"):
+        raise PromQLEvalError(f"{mode} modifier cannot be used with {fn}")
+    if fn == "absent_over_time":
+        from prometheus_spark.engine import functions as FN
+
+        present = eval_matrix_range(ctx, "present_over_time", node)
+        return FN.eval_absent(ctx, present, FN.absent_labels(node))
+
+    qc = ctx.duration_vars()
+    rng = resolve_duration_ms(node.range_ms, qc)
+    off = resolve_duration_ms(sel.offset_ms, qc)
+    at = sel.at
+    plain = mode is None and not sel.anchored and not sel.smoothed and at is None
+    ratio = rng // ctx.step_ms
+    thr = prefix_threshold()
+    if plain and fn == "double_exponential_smoothing" and (thr == 0 or ratio >= thr):
+        route = "des"
+    elif plain and fn in PREFIX_RANGE_FUNCS and (
+        thr == 0 or (not ctx.is_instant and ratio >= thr)
+    ):
+        route = "prefix"
+    elif mode is not None and at is None and fn in _RATE_FUNCS:
+        route = "extended"
+    else:
+        route = "explode"
+    hist_asof = plain and fn in _RATE_FUNCS and (
+        route == "prefix"
+        or (not ctx.is_instant and ratio >= hist_asof_threshold())
+    )
+
+    if at is not None:
+        hi = ctx.resolve_at(at) - off
+        lo = hi - rng
+    else:
+        lo, hi = ctx.start_ms - off - rng, ctx.end_ms - off
+    if mode is not None:
+        # boundary candidates: the last sample within the lookback before
+        # rangeStart; smoothed also the first one within it after rangeEnd
+        lo -= ctx.lookback_ms
+        if mode == "smoothed":
+            hi += ctx.lookback_ms
+    scoped = (
+        ctx.samples.filter(matcher_predicate(sel.matchers, ctx.samples.columns))
+        .filter(~F.col("stale"))
+        .filter(f"t > {lo} AND t <= {hi}")
+    )
+    dim = selector_dim(ctx, sel.matchers, scoped)
+
+    parts, rest = [], []
+    if route == "des":
+        parts.append(_des_fold(ctx, scoped.filter("value IS NOT NULL"), rng, off, *params))
+    elif route == "explode" and not hist_asof:
+        rest.append(scoped)
+    else:
+        floats, hists, mixed = split_kinds(ctx, scoped, stored=True)
+        if route == "prefix":
+            parts.append(_prefix_fold(ctx, fn, floats, rng, off))
+        elif route == "extended":
+            parts.append(_extended_fold(ctx, fn, floats, rng, off, mode == "smoothed"))
+        else:
+            rest.append(floats)
+        if hists is not None:
+            if hist_asof:
+                from prometheus_spark.engine import hist_arith
+
+                parts.append(hist_arith.window_rate_asof(
+                    ctx, hists, rng, off,
+                    is_counter=fn != "delta", is_rate=fn == "rate",
+                ))
+            else:
+                rest.append(hists)
+            rest.append(mixed)
+    if rest:
+        rows = rest[0]
+        for r in rest[1:]:
+            rows = rows.unionByName(r)
+        if mode is None:
+            w = scoped_windows(ctx, rows, rng, off, at)
+        else:
+            w, _ = extended_windowed_samples(
+                ctx, sel, rng, off, at, smoothed=mode == "smoothed", base=rows
+            )
+        parts.append(eval_range_function(
+            ctx, fn, w, rng, *params, mode=mode, dim=dim, stored=True
+        ).fact)
+    out = parts[0]
+    for p in parts[1:]:
+        out = _union_hist(out, p)
+    vf = VectorFrame(fact=out, dim=dim)
+    # range functions keep the series set: carry the selector's
+    # cardinality estimate (sig_inline_ok input)
+    est = selector_est(ctx, sel)
+    if est is not None:
+        vf.est_series, vf.est_sig_bytes = est
+    return vf
+
+
+# ---------------------------------------------------------------------
+# per-series Arrow folds over float samples: O(samples + series ×
+# steps), no range/step window explode
+
+
+def _fold_series(
+    ctx: EvalContext,
+    rows: DataFrame,
+    offset_ms: int,
+    schema: list,
+    body,
+    nan_cols: tuple = ("value",),
+) -> DataFrame:
+    """The scaffold of the float folds (``series_stats``,
+    ``series_fold``, ``des_series``): each series' rows ``(sig, t,
+    value[, st])`` ship once into an Arrow batch, sorted by t, and
+    ``body(ts, vs, steps, wend, pdf, order)`` returns the output columns
+    of the steps it emits (``t`` included) or None.  ``steps`` is the
+    step grid, ``wend`` each step's offset-adjusted window end, ``pdf``
+    the batch and ``order`` its t-sort permutation.  ``schema`` lists
+    the output columns after ``sig`` as ``"name type"``.
+
+    pandas→Arrow reads float NaN as null; a fold never emits null in
+    ``nan_cols``, so any null there IS a NaN and is restored."""
+    import numpy as np
+    import pandas as pd
+
+    steps = np.arange(ctx.start_ms, ctx.end_ms + 1, ctx.step_ms, dtype=np.int64)
+    wend = steps - offset_ms
+    names = [c.split()[0] for c in schema]
+    dtypes = {"long": np.int64, "double": np.float64}
+    empty = pd.DataFrame(
+        {
+            "sig": pd.Series([], dtype=str),
+            **{
+                n: pd.Series([], dtype=dtypes[c.split()[1]])
+                for n, c in zip(names, schema)
+            },
+        }
+    )
+
+    def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        ts = pdf["t"].to_numpy(np.int64)
+        order = np.argsort(ts, kind="mergesort")
+        out = body(
+            ts[order], pdf["value"].to_numpy(np.float64)[order],
+            steps, wend, pdf, order,
+        )
+        if out is None:
+            return empty
+        return pd.DataFrame({"sig": pdf["sig"].iloc[0], **out})
+
+    # the plan names the Python stage after the fold
+    fold.__name__ = fold.__qualname__ = body.__name__
+    folded = (
+        _pyfold_repartition(ctx, rows)
+        .groupBy("sig")
+        .applyInPandas(fold, schema=", ".join(["sig string", *schema]))
+    )
+    return folded.select(
+        "sig",
+        *(F.coalesce(F.col(n), _NAN()).alias(n) if n in nan_cols else n for n in names),
+    )
+
+
 def _pyfold_repartition(ctx: EvalContext, df: DataFrame) -> DataFrame:
     """Explicit sig-hash repartition ahead of a CPU-bound Python fold.
 
@@ -927,166 +967,37 @@ def _pyfold_repartition(ctx: EvalContext, df: DataFrame) -> DataFrame:
     return df.repartition(2 * ctx.spark.sparkContext.defaultParallelism, "sig")
 
 
-# ---------------------------------------------------------------------
-# prefix/as-of fast path
-
-
-def eval_range_function_prefix(
-    ctx: EvalContext,
-    func: str,
-    selector,
-    range_ms: int,
-    offset_ms: int = 0,
-) -> VectorFrame:
-    """O(samples + series×steps) evaluation of PREFIX_RANGE_FUNCS over a
-    plain matrix selector — no per-window sample duplication.
+def _prefix_fold(
+    ctx: EvalContext, func: str, floats: DataFrame, range_ms: int, offset_ms: int
+) -> DataFrame:
+    """PREFIX_RANGE_FUNCS over pure-float series without per-window
+    sample duplication.
 
     The reference evaluator is incremental (its ring buffer advances the
     window per step, engine.go matrixIterSlice); the windowed-explode
     plan replays each sample in every window instead, which costs
     range/step × the input (8640× for ``rate(x[1d])`` at a 10s step).
-    This path restores the O(samples) shape: each series' samples ship
-    once into an Arrow batch (:func:`_prefix_stats_arrow`), where two
-    ``np.searchsorted`` calls find every window's first and last sample
-    and prefix sums of counter drops / change flags / reset flags give
-    every window statistic by subtraction (n = idxᵦ − idxₐ + 1,
-    correction = cumdropᵦ − cumdropₐ, changes/resets likewise); the rate
+    Here two ``np.searchsorted`` calls per series find every window's
+    first and last sample, and prefix sums of counter drops / change
+    flags / reset flags give every window statistic by subtraction
+    (n = idxᵦ − idxₐ + 1, correction = cumdropᵦ − cumdropₐ,
+    changes/resets likewise).  A pure-Catalyst formulation (probe rows
+    interleaved with the samples, running windows over two sorts) cost
+    ~70 ms of interpreted WindowExec CPU per 1k-sample series.  The rate
     family feeds the SAME ``_extrapolate_from_stats`` arithmetic as the
-    explode path.
-
-    Series carrying native histograms are routed to the explode path
-    (mixed-window drop semantics live there); both halves union.
-    """
-    from prometheus_spark.engine.selectors import (
-        matcher_predicate,
-        windowed_samples,
-    )
-
-    base = ctx.samples.filter(
-        matcher_predicate(selector.matchers, ctx.samples.columns)
-    ).filter(~F.col("stale"))
-    lo = ctx.start_ms - offset_ms - range_ms
-    hi = ctx.end_ms - offset_ms
-    base = base.filter((F.col("t") > lo) & (F.col("t") <= hi))
-    st = F.col("st") if "st" in base.columns else F.lit(None).cast("long")
-    cols = [F.col("sig"), F.col("t"), F.col("value"), st.alias("st")]
-    # one labels dim for the whole call (float fast path + hist halves)
-    from prometheus_spark.engine.selectors import selector_dim
-
-    dim = selector_dim(ctx, selector.matchers, base)
-
-    # pure-float series stay on the float fast path; for the rate family
-    # pure-histogram series take the as-of path (same O(samples + steps)
-    # shape, no window explode — hist_arith.window_rate_asof) and mixed
-    # series the explode path, which owns per-window float/mixed
-    # routing; other functions send every histogram-bearing series to
-    # the explode path
-    floats, hists, mixed = split_kinds(ctx, base, stored=True)
-    base_f = floats.select(*cols)
-    hist_out = None
-    if hists is not None:
-        from prometheus_spark.engine import hist_arith
-
-        if func in ("rate", "increase", "delta"):
-            hist_out = hist_arith.window_rate_asof(
-                ctx, hists, range_ms, offset_ms,
-                is_counter=func != "delta", is_rate=func == "rate",
-            )
-            hseries = mixed
-        else:
-            hseries = hists.unionByName(mixed)
-        # lazily evaluated: zero hist series → empty explode input
-        hw, hdim = windowed_samples(ctx, hseries, range_ms, offset_ms=offset_ms)
-        explode_out = eval_range_function(
-            ctx, func, hw, range_ms, dim=hdim, stored=True
-        ).fact
-        hist_out = (
-            explode_out if hist_out is None
-            else hist_out.unionByName(explode_out, allowMissingColumns=True)
-        )
-
-    stats = _prefix_stats_arrow(ctx, base_f, range_ms, offset_ms)
-
-    if func in ("rate", "increase", "delta"):
-        if func == "delta":
-            # non-counter: no reset correction (functions.go:467
-            # extrapolatedRate's isCounter=false branch)
-            stats = stats.withColumn("correction", F.lit(0.0))
-        out = _extrapolate_from_stats(
-            ctx, stats, range_ms,
-            is_counter=func != "delta", is_rate=func == "rate",
-        )
-    else:
-        val = {
-            "changes": F.col("__changes"),
-            "resets": F.col("__resets"),
-            "count_over_time": F.col("n").cast("double"),
-            "present_over_time": F.lit(1.0),
-            "first_over_time": F.col("first_v"),
-            "last_over_time": F.col("last_v"),
-            "ts_of_first_over_time": F.col("first_t") / 1000.0,
-            "ts_of_last_over_time": F.col("last_t") / 1000.0,
-        }[func]
-        out = _finish(
-            stats.select("sig", "t", val.alias("value")),
-            ctx, keep_name=func in _KEEPS_NAME,
-        )
-    if hist_out is not None:
-        out = _union_hist(out, hist_out)
-    return VectorFrame(fact=out, dim=dim)
-
-
-def _prefix_stats_arrow(
-    ctx: EvalContext, base_f: DataFrame, range_ms: int, offset_ms: int
-) -> DataFrame:
-    """Per-(series, step) window stats via a vectorized Arrow fold.
-
-    A pure-Catalyst formulation (2·steps probe rows per series
-    interleaved with the samples, five running window expressions over
-    two sorts) cost ~70 ms of interpreted WindowExec CPU per 1k-sample
-    series (77 s CPU for h_hundred's 1,100 series).  The same math per
-    series is two ``np.searchsorted`` calls plus three ``np.cumsum``
-    prefix arrays — microseconds.  Samples ship ONCE into Arrow batches
-    (sig, t, value, st — no labels, split frame contract) and the
-    emitted stats frame feeds the identical JVM
-    ``_extrapolate_from_stats`` arithmetic, so extrapolation semantics
-    (and their corpus pins) are untouched."""
+    explode path, so the two are identical by construction."""
     import numpy as np
     import pandas as pd
 
-    step_arr = np.arange(
-        ctx.start_ms, ctx.end_ms + 1, ctx.step_ms, dtype=np.int64
-    )
-    wend_arr = step_arr - offset_ms
     rng = int(range_ms)
 
-    empty = pd.DataFrame(
-        {
-            "sig": pd.Series([], dtype=str),
-            "t": pd.Series([], dtype=np.int64),
-            "wend": pd.Series([], dtype=np.int64),
-            "n": pd.Series([], dtype=np.int64),
-            "first_t": pd.Series([], dtype=np.int64),
-            "last_t": pd.Series([], dtype=np.int64),
-            "first_v": pd.Series([], dtype=np.float64),
-            "last_v": pd.Series([], dtype=np.float64),
-            "st0": pd.Series([], dtype="Int64"),
-            "correction": pd.Series([], dtype=np.float64),
-            "__resets": pd.Series([], dtype=np.float64),
-            "__changes": pd.Series([], dtype=np.float64),
-        }
-    )
-
-    def series_stats(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        order = np.argsort(pdf["t"].to_numpy(np.int64), kind="mergesort")
-        ts = pdf["t"].to_numpy(np.int64)[order]
-        vs = pdf["value"].to_numpy(np.float64)[order]
-        right = np.searchsorted(ts, wend_arr, side="right")
-        left = np.searchsorted(ts, wend_arr - rng, side="right")
+    def series_stats(ts, vs, steps, wend, pdf, order):
+        right = np.searchsorted(ts, wend, side="right")
+        left = np.searchsorted(ts, wend - rng, side="right")
         n = right - left
         valid = n >= 1
         if not valid.any():
-            return empty
+            return None
         st_col = pdf["st"]
         has_st = st_col.notna().any()
         if has_st:
@@ -1139,57 +1050,186 @@ def _prefix_stats_arrow(
             st0[np.isnan(stfi)] = pd.NA
         else:
             st0 = pd.array([pd.NA] * int(valid.sum()), dtype="Int64")
-        return pd.DataFrame(
-            {
-                "sig": pdf["sig"].iloc[0],
-                "t": step_arr[valid],
-                "wend": wend_arr[valid],
-                "n": n[valid],
-                "first_t": ts[fi],
-                "last_t": ts[li],
-                "first_v": vs[fi],
-                "last_v": vs[li],
-                "st0": st0,
-                "correction": cum_drop[li] - cum_drop[fi],
-                "__resets": (cum_res[li] - cum_res[fi]).astype(np.float64),
-                "__changes": (cum_chg[li] - cum_chg[fi]).astype(np.float64),
-            }
-        )
+        return {
+            "t": steps[valid],
+            "wend": wend[valid],
+            "n": n[valid],
+            "first_t": ts[fi],
+            "last_t": ts[li],
+            "first_v": vs[fi],
+            "last_v": vs[li],
+            "st0": st0,
+            "correction": cum_drop[li] - cum_drop[fi],
+            "__resets": (cum_res[li] - cum_res[fi]).astype(np.float64),
+            "__changes": (cum_chg[li] - cum_chg[fi]).astype(np.float64),
+        }
 
-    folded = (
-        _pyfold_repartition(ctx, base_f.select("sig", "t", "value", "st"))
-        .groupBy("sig")
-        .applyInPandas(
-            series_stats,
-            schema=(
-                "sig string, t long, wend long, n long, first_t long, "
-                "last_t long, first_v double, last_v double, st0 long, "
-                "correction double, __resets double, __changes double"
-            ),
-        )
+    st = F.col("st") if "st" in floats.columns else F.lit(None).cast("long")
+    stats = _fold_series(
+        ctx,
+        floats.select("sig", "t", "value", st.alias("st")),
+        offset_ms,
+        [
+            "t long", "wend long", "n long", "first_t long", "last_t long",
+            "first_v double", "last_v double", "st0 long",
+            "correction double", "__resets double", "__changes double",
+        ],
+        series_stats,
+        nan_cols=("first_v", "last_v", "correction"),
     )
-    # pandas→Arrow reads float NaN as null; samples never carry null
-    # values on this (pure-float) path, so any null IS a NaN — restore
-    return folded.select(
-        "sig", "t", "wend", "n", "first_t", "last_t",
-        F.coalesce(F.col("first_v"), _NAN()).alias("first_v"),
-        F.coalesce(F.col("last_v"), _NAN()).alias("last_v"),
-        "st0",
-        F.coalesce(F.col("correction"), _NAN()).alias("correction"),
-        "__resets", "__changes",
+    if func in _RATE_FUNCS:
+        if func == "delta":
+            # non-counter: no reset correction (functions.go:467
+            # extrapolatedRate's isCounter=false branch)
+            stats = stats.withColumn("correction", F.lit(0.0))
+        return _extrapolate_from_stats(
+            ctx, stats, range_ms,
+            is_counter=func != "delta", is_rate=func == "rate",
+        )
+    val = {
+        "changes": F.col("__changes"),
+        "resets": F.col("__resets"),
+        "count_over_time": F.col("n").cast("double"),
+        "present_over_time": F.lit(1.0),
+        "first_over_time": F.col("first_v"),
+        "last_over_time": F.col("last_v"),
+        "ts_of_first_over_time": F.col("first_t") / 1000.0,
+        "ts_of_last_over_time": F.col("last_t") / 1000.0,
+    }[func]
+    return _finish(
+        stats.select("sig", "t", val.alias("value")),
+        ctx, keep_name=func in _KEEPS_NAME,
     )
 
 
-def eval_des_asof(
+def _extended_fold(
     ctx: EvalContext,
-    selector,
+    func: str,
+    floats: DataFrame,
     range_ms: int,
     offset_ms: int,
-    sf,
-    tf,
-) -> VectorFrame:
-    """double_exponential_smoothing over a plain matrix selector without
-    the range/step window explode.
+    smoothed: bool,
+) -> DataFrame:
+    """anchored/smoothed rate/increase/delta of pure-float series as a
+    per-series fold.
+
+    The materialized plan (selectors.extended_windowed_samples +
+    _extended_delta) explodes the samples THREE ways (interior + left +
+    right boundary candidates), unions them, runs two validity windows
+    and a lag window over the union, and aggregates — five shuffles of
+    samples×ratio rows.  Per series the same math is a pair of
+    ``np.searchsorted`` calls, one prefix cumsum of counter drops, and
+    vectorized boundary interpolation.  Sample adjacency (the
+    interpolation neighbours) comes from array shifts inside the fold,
+    over the series scoped to ``(start − offset − range − lookback,
+    end − offset (+ lookback when smoothed)]``: an out-of-scope
+    neighbour can only ever be consulted by an INVALID window — a left
+    boundary's next sample on a valid window is the window's first
+    interior sample or its right boundary (both in scope), a right
+    boundary's previous is the last interior or the left boundary, and
+    a right boundary whose previous sample precedes the scope has no
+    in-lookback left boundary, failing validity — so in-scope shifts are
+    exact for every emitted row."""
+    import numpy as np
+
+    lb = int(ctx.lookback_ms)
+    rng = int(range_ms)
+    rng_s = range_ms / 1000.0
+    is_counter = func != "delta"
+    is_rate = func == "rate"
+    sm = bool(smoothed)
+
+    def _ctr_drop(a, b, active):
+        # counter reset across the pair: NOT isnan(a/b) AND b < a → add a
+        return np.where(
+            active & ~np.isnan(a) & ~np.isnan(b) & (b < a), a, 0.0
+        )
+
+    def series_fold(ts, vs, steps, wend, pdf, order):
+        n = len(ts)
+        nsteps = len(steps)
+        rs = wend - rng
+        right = np.searchsorted(ts, wend, side="right")
+        left = np.searchsorted(ts, rs, side="right")
+        has_int = right > left
+        # L = latest sample at/before rangeStart, within lookback
+        li = np.clip(left - 1, 0, n - 1)
+        ts_l, v_l = ts[li], vs[li]
+        has_L = (left >= 1) & (ts_l > rs - lb)
+        L_eff = v_l
+        if sm:
+            # smoothed: interpolate strictly-pre-window L to the edge,
+            # counter-aware (functions.go:93 interpolate); the neighbour
+            # is the next in-scope sample — exact for valid windows (see
+            # docstring)
+            ni = np.clip(left, 0, n - 1)
+            nt_l, nv_l = ts[ni], vs[ni]
+            do_l = has_L & (ts_l < rs) & (left < n)
+            reset_l = (nv_l < v_l) if is_counter else np.zeros(nsteps, bool)
+            y1 = np.where(reset_l, 0.0, v_l)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                interp_l = y1 + (nv_l - y1) * (rs - ts_l) / (nt_l - ts_l)
+            L_eff = np.where(do_l, interp_l, v_l)
+        # R (smoothed) = earliest post-window sample, within lookback,
+        # with its previous sample strictly before the edge
+        has_R = np.zeros(nsteps, dtype=bool)
+        R_eff = np.full(nsteps, np.nan)
+        if sm:
+            ri = np.clip(right, 0, n - 1)
+            ts_r, v_r = ts[ri], vs[ri]
+            pi = np.clip(right - 1, 0, n - 1)
+            pt_r, pv_r = ts[pi], vs[pi]
+            has_prev = right >= 1
+            has_R = (
+                (right < n)
+                & (ts_r < wend + lb)
+                & (~has_prev | (pt_r < wend))
+            )
+            reset_r = (v_r < pv_r) if is_counter else np.zeros(nsteps, bool)
+            y1r = np.where(reset_r, 0.0, pv_r)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                interp_r = y1r + (v_r - y1r) * (wend - pt_r) / (ts_r - pt_r)
+            R_eff = np.where(has_prev, interp_r, v_r)
+        # validity: a sample after rangeStart (interior or R) and one
+        # at/before rangeEnd (interior or L) — extended_windowed_samples'
+        # __after/__before flags
+        valid = (has_int | has_R) & (has_int | has_L)
+        if not valid.any():
+            return None
+        fi = np.clip(left, 0, n - 1)
+        la = np.clip(right - 1, 0, n - 1)
+        int_first, int_last = vs[fi], vs[la]
+        first_eff = np.where(has_L, L_eff, np.where(has_int, int_first, R_eff))
+        last_eff = np.where(has_R, R_eff, np.where(has_int, int_last, L_eff))
+        corr = np.zeros(nsteps)
+        if is_counter:
+            if n >= 2:
+                a, b = vs[:-1], vs[1:]
+                dr = np.where(~np.isnan(a) & ~np.isnan(b) & (b < a), a, 0.0)
+                cum = np.concatenate(([0.0], np.cumsum(dr)))
+            else:
+                cum = np.zeros(1)
+            corr = np.where(has_int, cum[la] - cum[fi], 0.0)
+            corr = corr + _ctr_drop(L_eff, int_first, has_L & has_int)
+            corr = corr + _ctr_drop(int_last, R_eff, has_R & has_int)
+            corr = corr + _ctr_drop(L_eff, R_eff, has_L & has_R & ~has_int)
+        val = last_eff - first_eff + corr
+        if is_rate:
+            val = val / rng_s
+        return {"t": steps[valid], "value": val[valid]}
+
+    rows = floats.selectExpr("sig", "t", "CAST(value AS DOUBLE) AS value")
+    return _finish(
+        _fold_series(ctx, rows, offset_ms, ["t long", "value double"], series_fold),
+        ctx,
+    )
+
+
+def _des_fold(
+    ctx: EvalContext, rows: DataFrame, range_ms: int, offset_ms: int, sf, tf
+) -> DataFrame:
+    """double_exponential_smoothing without the range/step window
+    explode.
 
     The DES recurrence (reference functions.go:981) consumes every
     in-window sample per step and does not decompose into prefix sums —
@@ -1197,8 +1237,7 @@ def eval_des_asof(
     ring buffer pays the same).  What IS reducible is the explode: the
     windowed plan duplicates every sample once per window it falls in
     (8640× for ``[1d]`` at a 10s step) and pushes the copies through a
-    shuffle before folding.  This path ships each series' samples ONCE
-    into an Arrow batch and runs the recurrence for ALL steps of that
+    shuffle before folding.  Here the recurrence runs for ALL steps of a
     series simultaneously in numpy, iterating over the in-window sample
     OFFSET: per iteration one vectorized multiply-add across the step
     lanes, ``max_window_len`` iterations total.
@@ -1210,13 +1249,9 @@ def eval_des_asof(
     the same order, so results match the JVM fold exactly (pinned by
     tests/test_prefix_range.py::test_des_asof_parity).
 
-    Histogram samples are invisible to DES in the explode path
-    (``floats_only``); the same value-not-null filter applies here.
-    """
+    ``rows``: the float samples (histogram samples are invisible to DES
+    on the explode path too)."""
     import numpy as np
-    import pandas as pd
-
-    from prometheus_spark.engine.selectors import matcher_predicate
 
     if not isinstance(sf, ConstScalar) or not isinstance(tf, ConstScalar):
         raise PromQLEvalError(
@@ -1226,34 +1261,15 @@ def eval_des_asof(
     if not (0 < a < 1) or not (0 < b < 1):
         raise PromQLEvalError("smoothing/trend factors must be in (0, 1)")
     oma, omb = 1.0 - a, 1.0 - b
-
-    base = ctx.samples.filter(
-        matcher_predicate(selector.matchers, ctx.samples.columns)
-    ).filter(~F.col("stale")).filter(F.col("value").isNotNull())
-    lo = ctx.start_ms - offset_ms - range_ms
-    hi = ctx.end_ms - offset_ms
-    base = base.filter((F.col("t") > lo) & (F.col("t") <= hi))
-
-    step_arr = np.arange(
-        ctx.start_ms, ctx.end_ms + 1, ctx.step_ms, dtype=np.int64
-    )
-    wend_arr = step_arr - offset_ms
     rng = int(range_ms)
 
-    def des_series(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        order = np.argsort(pdf["t"].to_numpy(np.int64), kind="mergesort")
-        ts = pdf["t"].to_numpy(np.int64)[order]
-        vs = pdf["value"].to_numpy(np.float64)[order]
-        right = np.searchsorted(ts, wend_arr, side="right")
-        left = np.searchsorted(ts, wend_arr - rng, side="right")
+    def des_series(ts, vs, steps, wend, pdf, order):
+        right = np.searchsorted(ts, wend, side="right")
+        left = np.searchsorted(ts, wend - rng, side="right")
         n = right - left
         valid = n >= 2
         if not valid.any():
-            return pd.DataFrame(
-                {"sig": pd.Series([], dtype=str),
-                 "t": pd.Series([], dtype=np.int64),
-                 "value": pd.Series([], dtype=np.float64)}
-            )
+            return None
         start = left[valid]
         length = n[valid]
         if int(valid.sum()) <= 4:
@@ -1271,13 +1287,7 @@ def eval_des_asof(
                     trend_s = b * (nl - level_s) + omb * trend_s
                     level_s = nl
                 lv.append(level_s)
-            return pd.DataFrame(
-                {
-                    "sig": pdf["sig"].iloc[0],
-                    "t": step_arr[valid],
-                    "value": np.asarray(lv, dtype=np.float64),
-                }
-            )
+            return {"t": steps[valid], "value": np.asarray(lv, dtype=np.float64)}
         level = vs[start].copy()
         trend = vs[start + 1] - vs[start]
         last = len(vs) - 1
@@ -1290,50 +1300,17 @@ def eval_des_asof(
             nt = b * (nl - level) + omb * trend
             level = np.where(active, nl, level)
             trend = np.where(active, nt, trend)
-        return pd.DataFrame(
-            {
-                "sig": pdf["sig"].iloc[0],
-                "t": step_arr[valid],
-                "value": level,
-            }
-        )
+        return {"t": steps[valid], "value": level}
 
     # split frame contract: labels live on the dim, so the Arrow
     # batches carry only (sig, t, value) — no per-batch label arrays
-    from prometheus_spark.engine.selectors import selector_dim
-
-    dim = selector_dim(ctx, selector.matchers, base)
-    res = (
-        _pyfold_repartition(ctx, base.select("sig", "t", "value"))
-        .groupBy("sig")
-        .applyInPandas(
-            des_series,
-            schema="sig string, t long, value double",
-        )
+    return _finish(
+        _fold_series(
+            ctx, rows.select("sig", "t", "value"), offset_ms,
+            ["t long", "value double"], des_series,
+        ),
+        ctx,
     )
-    # pyarrow's pandas bridge reads float NaN as null; the recurrence
-    # never produces a genuine null, so restore NaN on the way out
-    out = res.select(
-        "sig",
-        "t",
-        F.coalesce(F.col("value"), _NAN()).alias("value"),
-    )
-    return VectorFrame(fact=_finish(out, ctx), dim=dim)
-
-
-def hist_asof_threshold() -> int:
-    """Minimum range/step ratio for routing PURE-histogram series of a
-    rate-family call through :func:`hist_arith.window_rate_asof` when
-    the ratio is below :func:`prefix_threshold` (floats keep the explode
-    path there).  Histogram windows are Python-cost dominated — the
-    explode multiplies ``from_row`` deserializations and shuffle bytes
-    by the ratio, so as-of wins for histograms at ratios where the
-    float explode still wins.  The hybrid only engages when the samples
-    frame can hold a histogram (:func:`hist_possible`).  Override with
-    PROMSPARK_HIST_ASOF_THRESHOLD."""
-    import os
-
-    return int(os.environ.get("PROMSPARK_HIST_ASOF_THRESHOLD", "4"))
 
 
 def hist_possible(ctx: EvalContext, df: DataFrame) -> bool:
@@ -1404,42 +1381,3 @@ def split_kinds(
         mixed = mw.filter("__wf = 1 AND __wh = 1").select(*cols)
     return floats, hists, mixed
 
-
-def eval_rate_hybrid(
-    ctx: EvalContext,
-    func: str,
-    selector,
-    range_ms: int,
-    offset_ms: int = 0,
-) -> VectorFrame:
-    """rate/increase/delta at explode-favoring ratios over hist-bearing
-    storage: float and mixed series keep the windowed-explode path
-    (optimal at low range/step), pure-histogram series take the as-of
-    path.  Bit-identical to the pure explode evaluation — the split
-    only reroutes series whose every window the explode path would hand
-    to ``window_rate`` anyway."""
-    from prometheus_spark.engine import hist_arith
-    from prometheus_spark.engine.selectors import (
-        matcher_predicate,
-        selector_dim,
-        windowed_samples,
-    )
-
-    base = ctx.samples.filter(
-        matcher_predicate(selector.matchers, ctx.samples.columns)
-    ).filter(~F.col("stale"))
-    lo = ctx.start_ms - offset_ms - range_ms
-    hi = ctx.end_ms - offset_ms
-    base = base.filter((F.col("t") > lo) & (F.col("t") <= hi))
-    floats, hists, mixed = split_kinds(ctx, base, stored=True)
-    dim = selector_dim(ctx, selector.matchers, base)
-    rest = floats if hists is None else floats.unionByName(mixed)
-    w, _wdim = windowed_samples(ctx, rest, range_ms, offset_ms=offset_ms)
-    out = eval_range_function(ctx, func, w, range_ms, dim=_wdim, stored=True).fact
-    if hists is not None:
-        h = hist_arith.window_rate_asof(
-            ctx, hists, range_ms, offset_ms,
-            is_counter=func != "delta", is_rate=func == "rate",
-        )
-        out = out.unionByName(h, allowMissingColumns=True)
-    return VectorFrame(fact=out, dim=dim)

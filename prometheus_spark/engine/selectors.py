@@ -438,9 +438,6 @@ def windowed_samples(
         ).filter(~F.col("stale"))
     else:
         base = node_or_df
-    hist_cols = ["hist"] if "hist" in base.columns else []
-    dn = "drop_name" if "drop_name" in base.columns else "false AS drop_name"
-    st = "st" if "st" in base.columns else "CAST(NULL AS BIGINT) AS st"
 
     if at is not None:
         ref = ctx.resolve_at(at) - offset_ms
@@ -459,21 +456,36 @@ def windowed_samples(
                 .groupBy("sig")
                 .agg(F.first("labels").alias("labels"))
             )
+    return scoped_windows(ctx, in_range, range_ms, offset_ms, at), dim
+
+
+def scoped_windows(
+    ctx: EvalContext,
+    in_range: DataFrame,
+    range_ms: int,
+    offset_ms: int = 0,
+    at=None,
+) -> DataFrame:
+    """The windows of :func:`windowed_samples` over samples already
+    scoped to the query's windows (stale markers and out-of-range rows
+    removed)."""
+    hist_cols = ["hist"] if "hist" in in_range.columns else []
+    dn = "drop_name" if "drop_name" in in_range.columns else "false AS drop_name"
+    st = "st" if "st" in in_range.columns else "CAST(NULL AS BIGINT) AS st"
     in_range = in_range.selectExpr("sig", "t", "value", dn, st, *hist_cols)
 
     # ``wend`` = the window's (offset-adjusted) right edge — rate
     # extrapolation measures sample distance to it (functions.go:472,
     # rangeEnd = ts - offset).
     if at is not None:
-        w = in_range.crossJoin(
+        ref = ctx.resolve_at(at) - offset_ms
+        return in_range.crossJoin(
             F.broadcast(ctx.grid.select(F.col("t").alias("step_t")))
         ).select(
             "sig", F.col("step_t").alias("out_t"), F.col("t").alias("sample_t"),
             "value", "drop_name", "st", *hist_cols, F.lit(ref).alias("wend"),
         ).withColumnsRenamed({"out_t": "t"})
-        return w, dim
-
-    return _sliding_windows(ctx, in_range, range_ms, offset_ms, hist_cols), dim
+    return _sliding_windows(ctx, in_range, range_ms, offset_ms, hist_cols)
 
 
 def _sliding_windows(ctx, in_range, range_ms, offset_ms, hist_cols):

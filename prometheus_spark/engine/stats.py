@@ -411,19 +411,8 @@ class _Ev:
             if self.reads is not None:
                 self.reads[os_] += nv
 
-    def _qctx(self) -> dict:
-        c = self.ctx
-        start = c.at_start_ms if c.at_start_ms is not None else c.start_ms
-        end = c.at_end_ms if c.at_end_ms is not None else c.end_ms
-        return {
-            "step": 0.0 if c.is_instant else c.step_ms / 1000.0,
-            "range": (end - start) / 1000.0,
-            "start": start / 1000.0,
-            "end": end / 1000.0,
-        }
-
     def _dur(self, v) -> int:
-        return resolve_duration_ms(v, self._qctx())
+        return resolve_duration_ms(v, self.ctx.duration_vars())
 
     # -- eval dispatch (engine.go eval) -----------------------------------
     def eval(self, node):

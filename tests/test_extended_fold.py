@@ -1,20 +1,27 @@
 """Extended-window (anchored/smoothed) rate family: Arrow fold parity.
 
-Round 13 replaced the three-branch explode+union plan with a per-series
-fold (range_functions.eval_extended_rate_fold).  These tests pin exact
-(float-repr) equality between the two implementations on the shapes
-where they can diverge: boundary interpolation, counter resets across
-edges, lookback expiry, sparse series, offsets, NaN values, and windows
-whose only contents are the two boundary rows.
+Over pure-float series the router (range_functions.eval_matrix_range)
+evaluates anchored/smoothed rate/increase/delta as a per-series fold
+(``series_fold``) instead of the three-branch explode+union plan, which
+histogram, mixed and @-pinned windows still take.  These tests pin exact
+(float-repr) equality between the fold and a direct explode evaluation
+(selectors.extended_windowed_samples + eval_range_function) on the
+shapes where they can diverge: boundary interpolation, counter resets
+across edges, lookback expiry, sparse series, offsets, NaN values, and
+windows whose only contents are the two boundary rows.
 """
-
-import os
 
 import pytest
 
 from prometheus_spark.engine import PromQLEngine
+from prometheus_spark.engine import range_functions as RF
+from prometheus_spark.engine.selectors import extended_windowed_samples
 from prometheus_spark.model.labels import sig_sql
+from prometheus_spark.parser import parse_expr
+from prometheus_spark.parser.ast import resolve_duration_ms
 from prometheus_spark.storage import samples_from_rows
+
+START, END, STEP = 0, 960_000, 30_000
 
 
 @pytest.fixture(scope="module")
@@ -51,20 +58,37 @@ QUERIES = [
 ]
 
 
+def _explode(eng, query):
+    """``fn(sel[r] anchored|smoothed [offset o])`` through the
+    materialized extended windows and the explode's window math."""
+    call = parse_expr(query)
+    m = call.args[0]
+    ctx = eng._ctx(START, END, STEP)
+    qc = ctx.duration_vars()
+    rng = resolve_duration_ms(m.range_ms, qc)
+    off = resolve_duration_ms(m.selector.offset_ms, qc)
+    w, dim = extended_windowed_samples(
+        ctx, m.selector, rng, off, smoothed=m.smoothed
+    )
+    vf = RF.eval_range_function(
+        ctx, call.func, w, rng,
+        mode="smoothed" if m.smoothed else "anchored", dim=dim, stored=True,
+    )
+    return eng._finalize_vf(vf, num_steps=ctx.num_steps)
+
+
+def _rows(df):
+    return [
+        (r["sig"], r["l"], r["t"], repr(r["value"]))
+        for r in df.selectExpr(
+            "sig", sig_sql("labels") + " AS l", "t", "value"
+        ).collect()
+    ]
+
+
 @pytest.mark.parametrize("query", QUERIES)
 def test_fold_matches_explode(spark, samples, query):
-    def run(impl):
-        os.environ["PROMSPARK_EXT_IMPL"] = impl
-        try:
-            eng = PromQLEngine(spark, samples)
-            df = eng.range_query(query, 0, 960_000, 30_000)
-            return [
-                (r["sig"], r["l"], r["t"], repr(r["value"]))
-                for r in df.selectExpr(
-                    "sig", sig_sql("labels") + " AS l", "t", "value"
-                ).collect()
-            ]
-        finally:
-            os.environ.pop("PROMSPARK_EXT_IMPL", None)
-
-    assert run("fold") == run("explode")
+    eng = PromQLEngine(spark, samples)
+    fold = eng.range_query(query, START, END, STEP)
+    assert "series_fold" in fold._jdf.queryExecution().executedPlan().toString()
+    assert _rows(fold) == _rows(_explode(eng, query))

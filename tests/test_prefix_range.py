@@ -1,7 +1,7 @@
 """Prefix/as-of fast path for range functions — differential parity.
 
-The fast path (range_functions.eval_range_function_prefix) must be
-bit-identical to the windowed-explode path for every function in
+The prefix fold (range_functions._prefix_fold, picked by
+eval_matrix_range at wide range/step ratios) must be bit-identical to the windowed-explode path for every function in
 PREFIX_RANGE_FUNCS, on data with counter resets, gaps, NaNs, offsets,
 and empty/single-sample windows.
 
@@ -131,7 +131,7 @@ def test_absent_over_time_prefix_parity(spark, samples, q):
 
 @pytest.mark.parametrize("q", DES_QUERIES)
 def test_des_asof_parity(spark, samples, q):
-    """eval_des_asof must be bit-identical to the windowed-explode fold
+    """The DES fold (range_functions._des_fold) must be bit-identical to the windowed-explode fold
     (same IEEE op order — see the docstring's recurrence mapping)."""
     fast = _run(spark, samples, q, "1")
     slow = _run(spark, samples, q, "99999999")
@@ -259,8 +259,9 @@ def test_hist_rate_asof_mixed_series_stay_on_explode(spark):
 ])
 def test_hist_rate_hybrid_parity(spark, hist_samples, q):
     """At explode-favoring ratios (below prefix_threshold), pure-hist
-    series route through eval_rate_hybrid; result must equal the pure
-    explode evaluation."""
+    series take the as-of route (hist_arith.window_rate_asof) while
+    floats and mixed series keep the explode; the result must equal the
+    pure explode evaluation."""
     os.environ["PROMSPARK_PREFIX_RANGE_THRESHOLD"] = "99999999"
     try:
         os.environ["PROMSPARK_HIST_ASOF_THRESHOLD"] = "1"
