@@ -335,16 +335,12 @@ def group_sum(
     vectorized steps instead of a Python op per row×bucket).  The fold
     order and every float operation replicate ``_kahan_inc`` /
     ``_fold_parts`` bit-for-bit; mixed-layout groups fall back to the
-    scalar ``hist_sum``/``hist_mean`` path.  Set
-    ``PROMSPARK_HIST_GS_VECTOR=0`` to force the scalar path everywhere
-    (differential parity testing)."""
-    import os
-
+    scalar ``hist_sum``/``hist_mean`` path (``_group_sum_pandas`` is
+    the all-scalar spelling, kept as the differential-parity
+    reference)."""
     from prometheus_spark.shipping import ensure_shipped
 
     ensure_shipped(ctx.spark)
-    if os.environ.get("PROMSPARK_HIST_GS_VECTOR", "1") == "0":
-        return _group_sum_pandas(ctx, df, avg, drop_name, order_col)
     src = df.select("sig", "t", "hist", F.col(order_col).alias("__ord"))
     if not pre_partitioned:
         src = src.repartition(F.col("sig"), F.col("t"))
@@ -363,6 +359,9 @@ def _group_sum_pandas(
     """Scalar reference implementation of :func:`group_sum` (per-group
     ``from_row`` + ``hist_sum`` Python fold) — the differential-parity
     baseline for the vectorized path."""
+    from prometheus_spark.shipping import ensure_shipped
+
+    ensure_shipped(ctx.spark)
     src = df.select("sig", "t", "hist", F.col(order_col).alias("__ord"))
 
     def one_group(pdf, rows):
@@ -1166,8 +1165,8 @@ def window_rate_asof(
 
     ``base``: un-windowed samples (sig, labels, t, hist[, st]) of series
     whose samples are ALL histograms; mixed float+hist series must stay
-    on the explode path (``_split_windows`` owns per-window float/mixed
-    routing).
+    on the explode path (``range_functions.split_kinds`` owns
+    per-window float/mixed routing).
 
     Execution: a ``mapInArrow`` stage (r10).  When the chunk's
     histograms share one bucket layout, start timestamps are absent,
@@ -1179,18 +1178,12 @@ def window_rate_asof(
     sequence, and ``Compact(0)`` becomes a flat keep-mask.  Series with
     resets / STs / layout drift replay the exact scalar ``hist_rate``
     sequence per window (``_rate_series_scalar``).
-    ``PROMSPARK_HIST_RATE_VECTOR=0`` forces the scalar pandas path
-    everywhere (differential parity baseline).
+    ``_window_rate_asof_pandas`` is the all-scalar spelling, kept as the
+    differential-parity reference.
     """
-    import os
-
     from prometheus_spark.shipping import ensure_shipped
 
     ensure_shipped(ctx.spark)
-    if os.environ.get("PROMSPARK_HIST_RATE_VECTOR", "1") == "0":
-        return _window_rate_asof_pandas(
-            ctx, base, range_ms, offset_ms, is_counter, is_rate
-        )
     if "st" not in base.columns:
         base = base.withColumn("st", F.lit(None).cast("long"))
     src = base.select("sig", "t", "hist", "st")
@@ -1214,6 +1207,9 @@ def _window_rate_asof_pandas(
     :func:`window_rate_asof` — the differential-parity baseline."""
     import numpy as np
 
+    from prometheus_spark.shipping import ensure_shipped
+
+    ensure_shipped(ctx.spark)
     if "st" not in base.columns:
         base = base.withColumn("st", F.lit(None).cast("long"))
     src = base.select("sig", "t", "hist", "st")
@@ -1376,9 +1372,9 @@ def _rate_asof_arrow_fn(
 ):
     """Build the ``mapInArrow`` batches function for
     :func:`window_rate_asof` (sig-sorted partitions, carry the tail
-    series across Arrow batches)."""
+    series across Arrow batches); plans name it ``rate_asof``."""
 
-    def batches(it):
+    def rate_asof(it):
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -1418,7 +1414,7 @@ def _rate_asof_arrow_fn(
                 {f.name: [] for f in out_schema}, schema=out_schema
             )
 
-    return batches
+    return rate_asof
 
 
 def _rate_fold_chunk(

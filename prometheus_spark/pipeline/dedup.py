@@ -432,64 +432,88 @@ def minhash_dup_candidates_portable(
     Signature build: explode the distinct shingles and take the
     ``num_perm`` permutation minima as conditional MIN aggregates in ONE
     map-side-combining whole-stage-codegen'd HashAggregate (the same
-    reshape as :func:`simhash_64_portable`'s ``agg`` vote fold).  The
-    previous per-row spelling — ``array_min`` over ``transform`` lambdas
-    — ran the md5 base hash AND all ``num_perm`` permutations as
-    interpreted higher-order functions, measured 8.5× slower at the sf1
-    rung (5.39 → 0.63 s isolated); post-explode every expression is
-    codegen'd.  Costs one shuffle of ``num_perm`` longs per doc
-    (map-side combined — proportionally small next to scanning the
-    document text); ``PROMSPARK_MINHASH_IMPL=hof`` keeps the zero-shuffle
-    per-row fold selectable (tests assert both spellings bit-identical).
-    Note the agg path emits one signature per distinct id (inputs with
-    duplicate ids merge); candidate PAIRS are unchanged either way
-    because `_bucketed_pairs` ends in ``distinct()``.
+    reshape as :func:`simhash_64_portable`'s vote fold).  The per-row
+    spelling — ``array_min`` over ``transform`` lambdas,
+    :func:`_portable_signatures_hof`, kept as the parity reference — ran
+    the md5 base hash AND all ``num_perm`` permutations as interpreted
+    higher-order functions, measured 8.5× slower at the sf1 rung (5.39 →
+    0.63 s isolated); post-explode every expression is codegen'd.  Costs
+    one shuffle of ``num_perm`` longs per doc (map-side combined —
+    proportionally small next to scanning the document text).  Note the
+    agg path emits one signature per distinct id (inputs with duplicate
+    ids merge); candidate PAIRS are unchanged either way because
+    `_bucketed_pairs` ends in ``distinct()``.
 
     Band bucket is ``md5(concat_ws(',', mins...))`` — portable, and
     collision-free in practice (128-bit)."""
-    import os
+    sigs = _portable_signatures_agg(df, text_col, id_col, num_perm, shingle_n)
+    return _portable_band_pairs(sigs, id_col, num_perm, bands, star_threshold)
 
+
+def _portable_signatures_agg(
+    df: DataFrame, text_col: str, id_col: str, num_perm: int, shingle_n: int
+) -> DataFrame:
+    """(id, m0..m{num_perm-1}): the portable minima as one codegen'd
+    explode + MIN aggregate."""
     p = PORTABLE_P
-    consts = portable_perm_constants(num_perm, p)
-    rows_per_band = num_perm // bands
-    grams = _word_ngrams(F.col(text_col), shingle_n)
-    if os.environ.get("PROMSPARK_MINHASH_IMPL") == "hof":
-        # project the base-hash array ONCE before fanning out into the
-        # num_perm array_min expressions — without the intermediate
-        # projection each min would re-derive the md5 of every shingle
-        base = F.transform(grams, lambda g: _portable_base_hash(g, p))
-        hashed = _spread(df, id_col).select(
-            F.col(id_col), base.alias("__base")
-        ).filter(F.size("__base") > 0)
-        mins = [
-            F.array_min(
-                F.transform(
-                    F.col("__base"), lambda b: (F.lit(a) * b + F.lit(c)) % F.lit(p)
-                )
-            )
-            for a, c in consts
+    # a_i, c_i < p = 2^31-1 and base < p, so a·b + c < 2^62: the
+    # permutation arithmetic stays in signed-64 range inside codegen
+    # exactly as it does in the DuckDB oracle rendering
+    exploded = _spread(df, id_col).select(
+        F.col(id_col),
+        F.explode(_word_ngrams(F.col(text_col), shingle_n)).alias("__g"),
+    )
+    based = exploded.select(
+        F.col(id_col), _portable_base_hash(F.col("__g"), p).alias("__b")
+    )
+    return based.groupBy(id_col).agg(
+        *[
+            F.min((F.lit(a) * F.col("__b") + F.lit(c)) % F.lit(p)).alias(f"m{i}")
+            for i, (a, c) in enumerate(portable_perm_constants(num_perm, p))
         ]
-        sigs = hashed.select(
-            F.col(id_col), *[m.alias(f"m{i}") for i, m in enumerate(mins)]
+    )
+
+
+def _portable_signatures_hof(
+    df: DataFrame, text_col: str, id_col: str, num_perm: int, shingle_n: int
+) -> DataFrame:
+    """The zero-shuffle per-row spelling of
+    :func:`_portable_signatures_agg` (higher-order ``array_min`` folds) —
+    the differential-parity reference."""
+    p = PORTABLE_P
+    # project the base-hash array ONCE before fanning out into the
+    # num_perm array_min expressions — without the intermediate
+    # projection each min would re-derive the md5 of every shingle
+    base = F.transform(
+        _word_ngrams(F.col(text_col), shingle_n),
+        lambda g: _portable_base_hash(g, p),
+    )
+    hashed = _spread(df, id_col).select(
+        F.col(id_col), base.alias("__base")
+    ).filter(F.size("__base") > 0)
+    mins = [
+        F.array_min(
+            F.transform(
+                F.col("__base"), lambda b: (F.lit(a) * b + F.lit(c)) % F.lit(p)
+            )
         )
-    else:
-        # a_i, c_i < p = 2^31-1 and base < p, so a·b + c < 2^62: the
-        # permutation arithmetic stays in signed-64 range inside codegen
-        # exactly as it does in the DuckDB oracle rendering
-        exploded = _spread(df, id_col).select(
-            F.col(id_col), F.explode(grams).alias("__g")
-        )
-        based = exploded.select(
-            F.col(id_col), _portable_base_hash(F.col("__g"), p).alias("__b")
-        )
-        sigs = based.groupBy(id_col).agg(
-            *[
-                F.min((F.lit(a) * F.col("__b") + F.lit(c)) % F.lit(p)).alias(
-                    f"m{i}"
-                )
-                for i, (a, c) in enumerate(consts)
-            ]
-        )
+        for a, c in portable_perm_constants(num_perm, p)
+    ]
+    return hashed.select(
+        F.col(id_col), *[m.alias(f"m{i}") for i, m in enumerate(mins)]
+    )
+
+
+def _portable_band_pairs(
+    sigs: DataFrame,
+    id_col: str,
+    num_perm: int,
+    bands: int,
+    star_threshold: Optional[int],
+) -> DataFrame:
+    """Candidate pairs of portable signatures ``(id, m0..)`` sharing a
+    band bucket."""
+    rows_per_band = num_perm // bands
     buckets = F.array(
         *[
             F.md5(
@@ -613,20 +637,96 @@ def simhash_64_portable(
     engines, and ``(h>>j)&1`` reads bit j regardless.  Same zero-shuffle
     per-row fold as :func:`simhash_64`.
 
-    Three vote-fold spellings, selectable via ``PROMSPARK_SIMHASH_IMPL``
-    (default with ``use_arrow=True``: ``agg``):
+    Three vote-fold spellings, tested bit-identical:
 
-    - ``agg`` — explode words into 64 conditional SUMs in one map-side-
-      combining whole-stage-codegen'd HashAggregate (2.0x over the
-      Arrow fold at sf10; see the inline comment)
-    - ``arrow`` — the vectorized :func:`_simhash_fold_arrow` map stage
-      (zero shuffle; the 100 TB fallback if shuffle bytes ever matter)
-    - ``sql`` (``use_arrow=False``) — the pure-SQL aggregate/zip_with
-      fold; the DuckDB oracle renders that exact SQL, and tests assert
-      all spellings are bit-identical."""
-    words = F.filter(
+    - :func:`_portable_simhash_agg` (``use_arrow=True``) — explode words
+      into 64 conditional SUMs in one map-side-combining
+      whole-stage-codegen'd HashAggregate (2.0x over the Arrow fold at
+      sf10; see the inline comment)
+    - :func:`_portable_simhash_arrow` — the vectorized
+      :func:`_simhash_fold_arrow` map stage (zero shuffle; the 100 TB
+      fallback if shuffle bytes ever matter)
+    - :func:`_portable_simhash_sql` (``use_arrow=False``) — the pure-SQL
+      aggregate/zip_with fold; the DuckDB oracle renders that exact
+      SQL."""
+    spell = _portable_simhash_agg if use_arrow else _portable_simhash_sql
+    return spell(df, text_col, id_col)
+
+
+def _portable_words(text_col: str) -> Column:
+    return F.filter(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"), lambda w: w != F.lit("")
     )
+
+
+def _portable_simhash_agg(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    # Whole-stage-codegen'd vote fold: explode words and take the 64
+    # per-bit ±1 vote sums as 64 conditional SUMs in ONE map-side-
+    # combining HashAggregate (same shape as the dense classic-le
+    # pivot).  No Python boundary at all, and conv() here runs inside
+    # codegen (per exploded row), not as an interpreted lambda per
+    # array element — measured 2.0x over the Arrow fold at sf10 (7.0 ->
+    # 3.5 s isolated, byte-identical).  Costs one shuffle of 64 longs
+    # per document (~0.5 kB, map-side combined) where the folds are
+    # shuffle-free — proportionally small next to scanning the multi-kB
+    # document text itself.
+    hi32 = "CAST(conv(substring(md5(__w), 1, 8), 16, 10) AS BIGINT)"
+    lo32 = "CAST(conv(substring(md5(__w), 9, 8), 16, 10) AS BIGINT)"
+    exploded = (
+        _spread(df, id_col)
+        .select(F.col(id_col), F.explode(_portable_words(text_col)).alias("__w"))
+        .selectExpr(id_col, f"{hi32} AS __hi", f"{lo32} AS __lo")
+    )
+    agg = exploded.groupBy(id_col).agg(
+        *[
+            F.expr(
+                f"sum(IF(((__lo >> {j}) & 1) = 1, 1, -1))"
+                if j < 32
+                else f"sum(IF(((__hi >> {j - 32}) & 1) = 1, 1, -1))"
+            ).alias(f"__v{j}")
+            for j in range(64)
+        ]
+    )
+    # bit j set iff the vote sum is positive (ties stay 0), matching
+    # both fold spellings; hex(hi)||hex(lo) == the oracle rendering
+    fp_lo = " + ".join(
+        f"IF(__v{j} > 0, CAST(1 AS BIGINT) << {j}, 0L)" for j in range(32)
+    )
+    fp_hi = " + ".join(
+        f"IF(__v{j} > 0, CAST(1 AS BIGINT) << {j - 32}, 0L)"
+        for j in range(32, 64)
+    )
+    return agg.selectExpr(
+        id_col,
+        f"lower(lpad(hex({fp_hi}), 8, '0') || lpad(hex({fp_lo}), 8, '0'))"
+        " AS simhash",
+    )
+
+
+def _portable_simhash_arrow(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    # the Arrow fold parses the 16-hex-char digests itself (see
+    # _simhash_fold_arrow hex_input): shipping strings and parsing
+    # vectorized beats the JVM conv() pack ~3x end-to-end at sf10
+    hashed = (
+        _spread(df, id_col)
+        .select(
+            F.col(id_col),
+            F.transform(
+                _portable_words(text_col),
+                lambda w: F.unhex(F.substring(F.md5(w), 1, 16)),
+            ).alias("__h"),
+        )
+        .filter(F.size("__h") > 0)
+    )
+    # hex of the signed-64 fingerprint == hex(hi) || hex(lo) of the
+    # SQL path's 32-bit halves (unsigned concatenation)
+    return _simhash_fold_arrow(hashed, id_col, hex_input=True).select(
+        F.col(id_col),
+        F.lower(F.lpad(F.hex(F.col("__fp")), 16, "0")).alias("simhash"),
+    )
+
+
+def _portable_simhash_sql(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     # md5 once per word; pack the first 16 hex chars into one long.
     # conv(…, 16, -10) interprets the 64-bit result as SIGNED — one conv
     # per token where the hi/lo spelling paid two convs plus a `when`
@@ -634,78 +734,11 @@ def simhash_64_portable(
     # 15.8 s → ~7 s for the pack stage at sf10.  Value-identical to the
     # hi/lo arithmetic (asserted in tests); the DuckDB oracle keeps the
     # portable hi/lo spelling — only VALUES must match across engines.
-    digests = F.transform(words, lambda w: F.md5(w))
+    digests = F.transform(_portable_words(text_col), lambda w: F.md5(w))
 
     def pack(d: Column) -> Column:
         return F.conv(F.substring(d, 1, 16), 16, -10).cast("long")
 
-    import os
-
-    impl = os.environ.get(
-        "PROMSPARK_SIMHASH_IMPL", "agg" if use_arrow else "sql"
-    )
-    if impl == "agg":
-        # Whole-stage-codegen'd vote fold: explode words and take the 64
-        # per-bit ±1 vote sums as 64 conditional SUMs in ONE map-side-
-        # combining HashAggregate (same shape as the dense classic-le
-        # pivot).  No Python boundary at all, and conv() here runs
-        # inside codegen (per exploded row), not as an interpreted
-        # lambda per array element — measured 2.0x over the Arrow fold
-        # at sf10 (7.0 -> 3.5 s isolated, byte-identical).  Costs one
-        # shuffle of 64 longs per document (~0.5 kB, map-side combined)
-        # where the folds are shuffle-free — proportionally small next
-        # to scanning the multi-kB document text itself.
-        hi32 = "CAST(conv(substring(md5(__w), 1, 8), 16, 10) AS BIGINT)"
-        lo32 = "CAST(conv(substring(md5(__w), 9, 8), 16, 10) AS BIGINT)"
-        exploded = (
-            _spread(df, id_col)
-            .select(F.col(id_col), F.explode(words).alias("__w"))
-            .selectExpr(id_col, f"{hi32} AS __hi", f"{lo32} AS __lo")
-        )
-        agg = exploded.groupBy(id_col).agg(
-            *[
-                F.expr(
-                    f"sum(IF(((__lo >> {j}) & 1) = 1, 1, -1))"
-                    if j < 32
-                    else f"sum(IF(((__hi >> {j - 32}) & 1) = 1, 1, -1))"
-                ).alias(f"__v{j}")
-                for j in range(64)
-            ]
-        )
-        # bit j set iff the vote sum is positive (ties stay 0), matching
-        # both fold spellings; hex(hi)||hex(lo) == the oracle rendering
-        fp_lo = " + ".join(
-            f"IF(__v{j} > 0, CAST(1 AS BIGINT) << {j}, 0L)" for j in range(32)
-        )
-        fp_hi = " + ".join(
-            f"IF(__v{j} > 0, CAST(1 AS BIGINT) << {j - 32}, 0L)"
-            for j in range(32, 64)
-        )
-        return agg.selectExpr(
-            id_col,
-            f"lower(lpad(hex({fp_hi}), 8, '0') || lpad(hex({fp_lo}), 8, '0'))"
-            " AS simhash",
-        )
-    if impl == "arrow":
-        # the Arrow fold parses the 16-hex-char digests itself (see
-        # _simhash_fold_arrow hex_input): shipping strings and parsing
-        # vectorized beats the JVM conv() pack ~3x end-to-end at sf10
-        hashed = (
-            _spread(df, id_col)
-            .select(
-                F.col(id_col),
-                F.transform(
-                    digests, lambda d: F.unhex(F.substring(d, 1, 16))
-                ).alias("__h"),
-            )
-            .filter(F.size("__h") > 0)
-        )
-        # hex of the signed-64 fingerprint == hex(hi) || hex(lo) of the
-        # SQL path's 32-bit halves (unsigned concatenation)
-        return _simhash_fold_arrow(hashed, id_col, hex_input=True).select(
-            F.col(id_col),
-            F.lower(F.lpad(F.hex(F.col("__fp")), 16, "0")).alias("simhash"),
-        )
     hashed = (
         _spread(df, id_col)
         .select(

@@ -14,7 +14,6 @@ fold (reference: promql/engine.go:3716 KahanAdd aggregation order) on:
 """
 
 import math
-import os
 import random
 
 import pytest
@@ -112,11 +111,8 @@ def _corpus(rng):
 
 
 def _run(ctx, df, avg, vector):
-    os.environ["PROMSPARK_HIST_GS_VECTOR"] = "1" if vector else "0"
-    try:
-        out = hist_arith.group_sum(ctx, df, avg=avg).collect()
-    finally:
-        os.environ.pop("PROMSPARK_HIST_GS_VECTOR", None)
+    fold = hist_arith.group_sum if vector else hist_arith._group_sum_pandas
+    out = fold(ctx, df, avg=avg).collect()
     return {(r["sig"], r["t"]): r for r in out}
 
 

@@ -9,7 +9,6 @@ reset-hint markers, custom buckets, created timestamps, and mid-series
 span-layout drift.
 """
 
-import os
 import random
 
 import pytest
@@ -106,13 +105,10 @@ def _corpus():
 
 
 def _run(ctx, df, vector, is_counter, is_rate):
-    os.environ["PROMSPARK_HIST_RATE_VECTOR"] = "1" if vector else "0"
-    try:
-        out = ha.window_rate_asof(
-            ctx, df, 300_000, 0, is_counter=is_counter, is_rate=is_rate
-        ).collect()
-    finally:
-        os.environ.pop("PROMSPARK_HIST_RATE_VECTOR", None)
+    fold = ha.window_rate_asof if vector else ha._window_rate_asof_pandas
+    out = fold(
+        ctx, df, 300_000, 0, is_counter=is_counter, is_rate=is_rate
+    ).collect()
     return {(r["sig"], r["t"]): r for r in out}
 
 

@@ -998,41 +998,54 @@ def test_simhash_arrow_fold_bit_identical(spark, docs):
 
 
 @needs_data
-def test_minhash_portable_impls_identical(spark, docs, monkeypatch):
-    """The codegen'd explode+MIN-agg signature build and the legacy
-    per-row HOF fold (``PROMSPARK_MINHASH_IMPL=hof``) emit the identical
-    candidate-pair set — the md5 permutation family IS the oracle
-    contract, so the reshape must not move a single signature value."""
-    from prometheus_spark.pipeline import minhash_dup_candidates_portable
-    from prometheus_spark.pipeline.dedup import STAR_THRESHOLD
+def test_minhash_portable_impls_identical(spark, docs):
+    """The codegen'd explode+MIN-agg signature build and the per-row HOF
+    fold (``_portable_signatures_hof``) emit the identical candidate-pair
+    set — the md5 permutation family IS the oracle contract, so the
+    reshape must not move a single signature value."""
+    from prometheus_spark.pipeline.dedup import (
+        STAR_THRESHOLD,
+        _portable_band_pairs,
+        _portable_signatures_agg,
+        _portable_signatures_hof,
+    )
 
     base = docs.limit(80)
     clone = base.withColumn("doc_id", F.col("doc_id") + 100000)
     corpus = base.unionByName(clone)
     got = {}
-    for impl in ("agg", "hof"):
-        monkeypatch.setenv("PROMSPARK_MINHASH_IMPL", impl)
+    for impl, signatures in (
+        ("agg", _portable_signatures_agg), ("hof", _portable_signatures_hof)
+    ):
+        sigs = signatures(corpus, "text", "doc_id", 16, 2)
         got[impl] = {
             (r["doc_a"], r["doc_b"])
-            for r in minhash_dup_candidates_portable(
-                corpus, shingle_n=2, star_threshold=STAR_THRESHOLD
+            for r in _portable_band_pairs(
+                sigs, "doc_id", 16, 4, STAR_THRESHOLD
             ).collect()
         }
     assert got["agg"] == got["hof"] and len(got["agg"]) >= 80
 
 
 @needs_data
-def test_simhash_portable_impls_bit_identical(spark, docs, monkeypatch):
+def test_simhash_portable_impls_bit_identical(spark, docs):
     """All three portable vote-fold spellings (codegen'd 64-agg, numpy
     Arrow fold, pure SQL) emit identical fingerprints — the md5 spelling
     IS the oracle contract."""
-    from prometheus_spark.pipeline import simhash_64_portable
+    from prometheus_spark.pipeline.dedup import (
+        _portable_simhash_agg,
+        _portable_simhash_arrow,
+        _portable_simhash_sql,
+    )
 
     base = docs.limit(50)
     got = {}
-    for impl in ("agg", "arrow", "sql"):
-        monkeypatch.setenv("PROMSPARK_SIMHASH_IMPL", impl)
+    for impl, spell in (
+        ("agg", _portable_simhash_agg),
+        ("arrow", _portable_simhash_arrow),
+        ("sql", _portable_simhash_sql),
+    ):
         got[impl] = {
-            r["doc_id"]: r["simhash"] for r in simhash_64_portable(base).collect()
+            r["doc_id"]: r["simhash"] for r in spell(base, "text", "doc_id").collect()
         }
     assert got["agg"] == got["arrow"] == got["sql"] and len(got["agg"]) == 50
