@@ -95,12 +95,6 @@ _ENV_KNOBS = {
     # boundaries (parity sweeps)
     "PROMSPARK_PREFIX_RANGE_THRESHOLD": "prefix/as-of route cutoff, forced by parity tests",
     "PROMSPARK_HIST_ASOF_THRESHOLD": "histogram as-of route cutoff, forced by parity tests",
-    # the other path is a parity test's reference
-    "PROMSPARK_EXT_IMPL": "anchored/smoothed fold vs explode, reference in test_extended_fold",
-    "PROMSPARK_HIST_GS_VECTOR": "histogram group_sum vector fold, reference in test_hist_group_sum",
-    "PROMSPARK_HIST_RATE_VECTOR": "histogram rate vector fold, reference in test_hist_rate_vector",
-    "PROMSPARK_MINHASH_IMPL": "minhash implementation, reference in test_pipeline",
-    "PROMSPARK_SIMHASH_IMPL": "simhash implementation, reference in test_pipeline",
     # driver-side Python GC pacing for long-lived servers (pygc.py)
     "PROMSPARK_GC_EVERY": "collect every N rule evaluations",
     "PROMSPARK_GC_DEBUG": "log each paced collection",
@@ -118,3 +112,30 @@ def test_env_knobs_allow_listed():
     assert found == set(_ENV_KNOBS), (
         sorted(found - set(_ENV_KNOBS)), sorted(set(_ENV_KNOBS) - found)
     )
+
+
+# The route choice for a range function over a matrix selector lives in
+# range_functions.eval_matrix_range: the thresholds it reads and the
+# kernels it picks are called from nowhere else in the package.
+_ROUTE_CALLS = (
+    "prefix_threshold", "hist_asof_threshold",
+    "_prefix_fold", "_extended_fold", "_des_fold", "window_rate_asof",
+)
+
+
+def test_route_decision_in_one_module():
+    import re
+    from pathlib import Path
+
+    root = Path(prometheus_spark.__file__).parent
+    call = re.compile(
+        r"(?<!def )\b(" + "|".join(_ROUTE_CALLS) + r")\("
+    )
+    found = []
+    for path in root.rglob("*.py"):
+        if path.name == "range_functions.py":
+            continue
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            for m in call.finditer(line):
+                found.append(f"{path.relative_to(root)}:{i}: {m.group(1)}")
+    assert not found, found
